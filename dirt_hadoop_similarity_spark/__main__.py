@@ -2,7 +2,7 @@
 points as ONE command.
 
     python -m dirt_hadoop_similarity_spark CORPUS [--testset POS NEG]
-           [--out DIR] [--dialect java|eval] [--master M]
+           [--out DIR] [--dialect java|eval] [--master M] [--top-k K] [--plot]
 
 Reference parity:
   * DirtDriver.run() (DirtDriver.java:981-1092) chains Jobs 1-4 with S3
@@ -12,8 +12,10 @@ Reference parity:
   * analysis/evaluate_dirt.py main() (evaluate_dirt.py:226-264) loads the
     Job-4 part files, searches the optimal-F1 threshold, prints error
     analysis, and plots the PR curve; here the same numbers come from
-    plans/evaluate.evaluate on the in-flight sims DataFrame and the curve
-    is exported as CSV points (no matplotlib in this container).
+    plans/evaluate.evaluate, one driver-side pass over the in-flight
+    test-pair scores, and the curve is exported as CSV points (--plot adds
+    the PNG when matplotlib is installed).  report.md lists the first
+    --top-k pairs of each outcome class.
 
 Outputs under --out (created if needed):
     similarities.tsv/   p1 \t p2 \t score   (Job-4 final output, F5 export)
@@ -177,22 +179,15 @@ def main(argv=None) -> int:
             .csv(os.path.join(args.out, "pr_curve.csv"))
         )
 
-        if args.plot:
-            scan_rows = [
-                r.asDict()
-                for r in report["scan"]
-                .select("score", "precision", "recall")
-                .orderBy(F.desc("score"))
-                .collect()  # gold-set bounded (see pr_scan's plan pin)
-            ]
-            if _plot_pr_curve(
-                scan_rows,
-                os.path.join(args.out, "precision_recall_curve.png"),
-            ):
-                summary["pr_curve_png"] = True
+        # the scan is already in descending-score order
+        if args.plot and _plot_pr_curve(
+            report["scan"].collect(),
+            os.path.join(args.out, "precision_recall_curve.png"),
+        ):
+            summary["pr_curve_png"] = True
 
         samples = {
-            k: df.collect() for k, df in report["samples"].items()
+            k: df.collect()[: args.top_k] for k, df in report["samples"].items()
         }
         with open(os.path.join(args.out, "metrics.json"), "w") as f:
             json.dump({**metrics, "pairs_found": pairs_found}, f, indent=2)

@@ -1,22 +1,24 @@
 """Evaluation harness: optimal-F1 threshold search, PR curve, error
 sampling — the Spark rendering of analysis/evaluate_dirt.py.
 
-The evaluator's single-process cumulative scan (evaluate_dirt.py:103-154)
-becomes a window cumulative sum ordered by descending score; the
-"pair → max score" dedup (A7, evaluate_dirt.py:92-101) a groupBy max; the
-false-negative fill (J6, evaluate_dirt.py:185-189) a left-anti join.
-
-Scale note: the window has no partition key, which serializes the sort on
-one task.  Labeled pairs number in the thousands (the gold sets bound
-them), so this is correct at any corpus scale — the big relation (system
-scores) is reduced by the inner join to gold before the window.
+The evaluation itself is the reference's single-process pass
+(evaluate_dirt.py:103-199), run on the driver: both inputs are bounded by
+the test set (the CLI scores only test pairs, and the gold set is compiled
+in the driver), so a distributed plan would only add per-job overhead.
+The scan and the error samples are handed back as small DataFrames for
+the CSV writer and callers that expect relations.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+
+SCAN_SCHEMA = (
+    "p1 string, p2 string, score double, label int, tp bigint, fp bigint, "
+    "precision double, recall double, f1 double"
+)
+SAMPLE_SCHEMA = "p1 string, p2 string, score double, label int"
 
 
 def load_system_output(spark: SparkSession, path: str) -> DataFrame:
@@ -46,104 +48,71 @@ def load_system_output(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def canonical_gold(pairs_df: DataFrame) -> DataFrame:
-    """(p1, p2, label) → canonicalized, deduped; a pair present in both
-    files keeps the positive label (matches the evaluator's set order)."""
-    return (
-        pairs_df.select(
-            F.least("p1", "p2").alias("p1"),
-            F.greatest("p1", "p2").alias("p2"),
-            "label",
-        )
-        .groupBy("p1", "p2")
-        .agg(F.max("label").alias("label"))
-    )
-
-
-def pr_scan(scored: DataFrame, gold: DataFrame) -> DataFrame:
-    """A8: labeled pairs in descending-score order with cumulative
-    tp/fp, precision, recall, f1 per prefix (threshold = row's score).
-
-    Parity note: the reference evaluator's find_optimal_threshold
-    (analysis/evaluate_dirt.py:226-250) iterates every OCCURRENCE of a
-    pair across part files, double-counting a pair that appears in more
-    than one reducer's output; here the scan runs over pairs already
-    deduped to max score (load_system_output / A7), which is the
-    intentional, arguably-more-correct divergence — Job 4 partitions by
-    pair so duplicates should not occur in practice."""
-    total_pos = gold.filter(F.col("label") == 1).count()
-    labeled = scored.join(gold, ["p1", "p2"], "inner")
-    w = (
-        W.orderBy(F.desc("score"), "p1", "p2")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    tp = F.sum("label").over(w)
-    fp = F.sum(1 - F.col("label")).over(w)
-    prec = F.when(tp + fp > 0, tp / (tp + fp)).otherwise(0.0)
-    rec = tp / F.lit(float(max(total_pos, 1)))
-    f1 = F.when(prec + rec > 0, 2 * prec * rec / (prec + rec)).otherwise(0.0)
-    return labeled.select(
-        "p1",
-        "p2",
-        "score",
-        "label",
-        tp.alias("tp"),
-        fp.alias("fp"),
-        prec.alias("precision"),
-        rec.alias("recall"),
-        f1.alias("f1"),
-    )
-
-
-def optimal_threshold(scan: DataFrame) -> dict:
-    """A9: the scan row with max F1; ties resolve to the highest score
-    (the evaluator's strictly-greater update in descending order)."""
-    best = (
-        scan.orderBy(F.desc("f1"), F.desc("score"), "p1", "p2").limit(1).collect()
-    )
-    if not best:
-        return {"threshold": 0.0, "precision": 0.0, "recall": 0.0, "f1": 0.0}
-    row = best[0]
-    return {
-        "threshold": row.score,
-        "precision": row.precision,
-        "recall": row.recall,
-        "f1": row.f1,
-    }
-
-
-def error_samples(
-    scored: DataFrame, gold: DataFrame, threshold: float, k: int = 5
-) -> dict[str, DataFrame]:
-    """O4/J6: top-k examples per outcome class.  FN includes gold
-    positives entirely absent from the system output (left-anti fill)."""
-    labeled = scored.join(gold, ["p1", "p2"], "inner")
-    above = labeled.filter(F.col("score") >= threshold)
-    below = labeled.filter(F.col("score") < threshold)
-    missing = (
-        gold.filter(F.col("label") == 1)
-        .join(scored, ["p1", "p2"], "left_anti")
-        .select("p1", "p2", F.lit(0.0).alias("score"), "label")
-    )
-    by_desc = lambda df: df.orderBy(F.desc("score"), "p1", "p2").limit(k)  # noqa: E731
-    return {
-        "tp": by_desc(above.filter(F.col("label") == 1)),
-        "fp": by_desc(above.filter(F.col("label") == 0)),
-        "tn": by_desc(below.filter(F.col("label") == 0)),
-        "fn": by_desc(below.filter(F.col("label") == 1).unionByName(missing)),
-    }
-
-
 def evaluate(scored: DataFrame, gold_pairs: DataFrame) -> dict:
-    """Full evaluation: returns the optimal-threshold metrics plus the
-    PR scan and error samples (lazy DataFrames)."""
-    gold = canonical_gold(gold_pairs)
-    scan = pr_scan(scored, gold)
-    metrics = optimal_threshold(scan)
-    samples = error_samples(scored, gold, metrics["threshold"])
+    """A8/A9/O4/J6: optimal-F1 metrics, the PR scan and the error samples.
+
+    Gold pairs are canonicalized; a pair in both files keeps label 1.
+    The scan is the labeled pairs (scored ⋈ gold) in (score desc, p1, p2)
+    order with cumulative tp/fp, precision, recall and F1 per prefix
+    (threshold = row's score).  The optimal row has the highest F1, ties
+    to the highest score (the evaluator's strictly-greater update).
+    Samples hold every row of each outcome class in scan order; FN adds
+    the gold positives absent from ``scored`` with score 0.0.
+
+    A pair occurring more than once in ``scored`` is counted per
+    occurrence, as in the reference's find_optimal_threshold
+    (analysis/evaluate_dirt.py:226-250); load_system_output first dedups
+    to the max score per pair (A7), and Job 4 partitions by pair so the
+    CLI's scores hold no duplicates."""
+    spark = scored.sparkSession
+    gold: dict[tuple[str, str], int] = {}
+    for p1, p2, label in gold_pairs.select("p1", "p2", "label").collect():
+        key = (min(p1, p2), max(p1, p2))
+        gold[key] = max(gold.get(key, label), label)
+    rows = scored.select("p1", "p2", "score").collect()
+    total_pos = sum(1 for label in gold.values() if label == 1)
+
+    scan = []
+    tp = fp = 0
+    for neg_score, p1, p2, label in sorted(
+        (-score, p1, p2, gold[(p1, p2)])
+        for p1, p2, score in rows
+        if (p1, p2) in gold
+    ):
+        tp += label
+        fp += 1 - label
+        prec = tp / (tp + fp)
+        rec = tp / float(max(total_pos, 1))
+        f1 = 2 * prec * rec / (prec + rec) if prec + rec > 0 else 0.0
+        scan.append((p1, p2, -neg_score, label, tp, fp, prec, rec, f1))
+
+    if scan:
+        _, _, score, _, _, _, prec, rec, f1 = min(
+            scan, key=lambda r: (-r[8], -r[2], r[0], r[1])
+        )
+        metrics = {"threshold": score, "precision": prec, "recall": rec, "f1": f1}
+    else:
+        metrics = {"threshold": 0.0, "precision": 0.0, "recall": 0.0, "f1": 0.0}
+
+    classes: dict[str, list] = {"tp": [], "fp": [], "tn": [], "fn": []}
+    for p1, p2, score, label, *_ in scan:
+        if score >= metrics["threshold"]:
+            classes["tp" if label else "fp"].append((p1, p2, score, label))
+        else:
+            classes["fn" if label else "tn"].append((p1, p2, score, label))
+    seen = {(p1, p2) for p1, p2, _ in rows}
+    classes["fn"] += [
+        (p1, p2, 0.0, 1)
+        for (p1, p2), label in gold.items()
+        if label == 1 and (p1, p2) not in seen
+    ]
+    classes["fn"].sort(key=lambda r: (-r[2], r[0], r[1]))
+
     return {
         "metrics": metrics,
-        "n_scored": scored.count(),
-        "scan": scan,
-        "samples": samples,
+        "n_scored": len(rows),
+        "scan": spark.createDataFrame(scan, SCAN_SCHEMA),
+        "samples": {
+            k: spark.createDataFrame(v, SAMPLE_SCHEMA) for k, v in classes.items()
+        },
     }

@@ -125,6 +125,30 @@ def test_cli_plot_flag_degrades_without_matplotlib(spark, tmp_path, capsys):
         assert glob.glob(str(out / "pr_curve.csv" / "part-*"))
 
 
+def test_cli_top_k_limits_error_samples(spark, tmp_path):
+    corpus = tmp_path / "corpus4.txt"
+    corpus.write_text("\n".join(CORPUS) + "\n")
+    # two gold positives whose paths never occur in the corpus: both are
+    # unscored false negatives
+    pos = tmp_path / "p4.txt"
+    pos.write_text(
+        "X chase Y\tX pursue Y\nX eat Y\tX devour Y\nX build Y\tX make Y\n"
+    )
+    neg = tmp_path / "n4.txt"
+    neg.write_text("X chase Y\tX die from Y\n")
+    out = tmp_path / "out4"
+    rc = cli_main(
+        [str(corpus), "--testset", str(pos), str(neg), "--out", str(out),
+         "--top-k", "1"]
+    )
+    assert rc == 0
+    metrics = json.loads((out / "metrics.json").read_text())
+    assert metrics["recall"] == pytest.approx(1 / 3)
+    report = (out / "report.md").read_text()
+    fn = report.split("## False negatives\n\n")[1].split("\n\n")[0]
+    assert len(fn.splitlines()) == 1 and "<->" in fn, report
+
+
 def test_curate_cli_end_to_end(spark, sf_dir, tmp_path):
     from dirt_hadoop_similarity_spark.curate import main as curate_main
 

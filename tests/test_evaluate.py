@@ -33,7 +33,7 @@ def tiny(spark):
 
 def test_pr_scan_values(tiny):
     scored, gold = tiny
-    scan = evaluate.pr_scan(scored, evaluate.canonical_gold(gold))
+    scan = evaluate.evaluate(scored, gold)["scan"]
     rows = {(r.p1, r.p2): r for r in scan.collect()}
     assert len(rows) == 4  # unlabeled pair dropped
     r1 = rows[("a", "b")]
@@ -64,7 +64,57 @@ def test_error_samples(tiny):
     fn = {(r.p1, r.p2) for r in s["fn"].collect()}
     assert tp == {("a", "b"), ("b", "c"), ("d", "e")}
     assert fp == {("a", "c")}
-    assert fn == {("e", "f")}  # the never-scored positive, via anti-join
+    assert fn == {("e", "f")}  # the never-scored positive
+    assert [r.score for r in s["fn"].collect()] == [0.0]
+
+
+@pytest.mark.parametrize(
+    "scored_rows, gold_rows, metrics, scan",
+    [
+        pytest.param(
+            # prefixes 1 and 4 both reach F1 = 2/3 (P=1 R=1/2, P=1/2 R=1):
+            # the tie resolves to the higher score
+            [("a", "b", 0.9), ("c", "d", 0.8), ("e", "f", 0.7), ("g", "h", 0.6)],
+            [("a", "b", 1), ("c", "d", 0), ("e", "f", 0), ("g", "h", 1)],
+            {"threshold": 0.9, "precision": 1.0, "recall": 0.5, "f1": 2 / 3},
+            [("a", "b", 1, 1, 0), ("c", "d", 0, 1, 1), ("e", "f", 0, 1, 2),
+             ("g", "h", 1, 2, 2)],
+            id="f1_tie_takes_higher_score",
+        ),
+        pytest.param(
+            # equal scores accumulate in (p1, p2) order
+            [("b", "c", 0.5), ("a", "z", 0.5)],
+            [("b", "c", 0), ("a", "z", 1)],
+            {"threshold": 0.5, "precision": 1.0, "recall": 1.0, "f1": 1.0},
+            [("a", "z", 1, 1, 0), ("b", "c", 0, 1, 1)],
+            id="equal_scores_in_pair_order",
+        ),
+        pytest.param(
+            # listed reversed in the negative file first, then positive
+            [("a", "b", 0.9)],
+            [("b", "a", 0), ("a", "b", 1)],
+            {"threshold": 0.9, "precision": 1.0, "recall": 1.0, "f1": 1.0},
+            [("a", "b", 1, 1, 0)],
+            id="pair_in_both_files_keeps_label_1",
+        ),
+        pytest.param(
+            [("x", "y", 0.9)],
+            [("a", "b", 1)],
+            {"threshold": 0.0, "precision": 0.0, "recall": 0.0, "f1": 0.0},
+            [],
+            id="no_labeled_rows",
+        ),
+    ],
+)
+def test_scan_and_metrics(spark, scored_rows, gold_rows, metrics, scan):
+    res = evaluate.evaluate(
+        spark.createDataFrame(scored_rows, "p1 string, p2 string, score double"),
+        spark.createDataFrame(gold_rows, "p1 string, p2 string, label int"),
+    )
+    assert res["metrics"] == metrics
+    rows = res["scan"].collect()
+    assert [(r.p1, r.p2, r.label, r.tp, r.fp) for r in rows] == scan
+    assert len(res["scan"].columns) == 9
 
 
 def test_golden_files_load_and_evaluate(spark):

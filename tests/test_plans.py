@@ -79,11 +79,11 @@ def test_events_filter_pushdown_survives_ts_conversion(spark, sf_dir):
     )[1][:200], plan
 
 
-def test_pr_scan_window_input_is_gold_bounded(spark):
-    """Pin the bound behind pr_scan's unpartitioned window: its input is
-    scored INNER JOIN gold, so window cardinality ≤ |gold| (test-set
-    sized) no matter how large the system output grows."""
-    from dirt_hadoop_similarity_spark.plans.evaluate import pr_scan
+def test_pr_scan_is_gold_bounded(spark):
+    """The evaluator's scan holds only labeled pairs (scored INNER JOIN
+    gold), so the PR curve is test-set sized however many pairs the
+    system scores."""
+    from dirt_hadoop_similarity_spark.plans.evaluate import evaluate
 
     scored = spark.range(5000).select(
         F.concat(F.lit("a"), "id").alias("p1"),
@@ -95,12 +95,9 @@ def test_pr_scan_window_input_is_gold_bounded(spark):
         F.concat(F.lit("b"), "id").alias("p2"),
         (F.col("id") % 2).cast("int").alias("label"),
     )
-    scan = pr_scan(scored, gold)
-    assert scan.count() <= 20
-    # structurally: the Window must sit ABOVE the join in the plan tree
-    plan = scan._jdf.queryExecution().optimizedPlan().toString()
-    w_pos = plan.index("Window")
-    assert "Join" in plan[w_pos:], plan
+    res = evaluate(scored, gold)
+    assert res["n_scored"] == 5000
+    assert res["scan"].count() <= 20
 
 
 def test_mixture_factors_broadcast_corpus_never_smj(spark, sf_dir):
