@@ -17,6 +17,15 @@ Reference parity:
     the PNG when matplotlib is installed).  report.md lists the first
     --top-k pairs of each outcome class.
 
+Sizing and cache:
+  * The job makes one sizing decision, in main (_job_session): it runs on
+    a job-owned session (``newSession()``: same SparkContext and cache,
+    its own SQL conf) whose shuffle partitions and AQE setting come from
+    --shuffle-partitions or from the corpus size.  The caller's session
+    conf is left as it was, and an existing session is used as it is.
+  * Every relation the job caches (triples, MI, similarities) is
+    released when main returns or raises.
+
 Outputs under --out (created if needed):
     similarities.tsv/   p1 \t p2 \t score   (Job-4 final output, F5 export)
     mi.tsv/             path \t slot \t word \t mi     (Job-2 output)
@@ -34,6 +43,10 @@ import os
 import sys
 
 from pyspark.sql import functions as F
+
+
+_PARTITIONS = "spark.sql.shuffle.partitions"
+_AQE = "spark.sql.adaptive.enabled"
 
 
 def _build_parser() -> argparse.ArgumentParser:
@@ -60,7 +73,11 @@ def _build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument("--master", default=None, help="Spark master override")
     p.add_argument(
-        "--shuffle-partitions", type=int, default=None, help="shuffle partitions"
+        "--shuffle-partitions",
+        type=int,
+        default=None,
+        help="the job's static shuffle-partition count (AQE off); by "
+        "default derived from the corpus size",
     )
     p.add_argument(
         "--top-k", type=int, default=5, help="error-analysis samples per class"
@@ -111,20 +128,64 @@ def _fmt_pairs(rows) -> str:
     )
 
 
+def _job_session(spark, corpus: str, shuffle_partitions: int | None):
+    """The job's one sizing decision, on a session of its own.
+
+    ``newSession()`` shares the SparkContext and the cache but has its own
+    SQL conf, so every plan of the job runs under the decision and nothing
+    is set on the caller's session.  An explicit ``--shuffle-partitions``
+    is the static partition count; otherwise ``scale.static_partitions``
+    derives one from the corpus scan's byte estimate.  Static means AQE
+    off: on a small corpus each AQE stage and broadcast job is fixed cost.
+    At cluster-scale input no count is derived and the job runs with the
+    caller's partitions and AQE setting."""
+    from dirt_hadoop_similarity_spark.operators.scale import static_partitions
+
+    job = spark.newSession()
+    parts = shuffle_partitions or static_partitions(spark, spark.read.text(corpus))
+    if parts is None:
+        for key in (_PARTITIONS, _AQE):
+            job.conf.set(key, spark.conf.get(key))
+    else:
+        job.conf.set(_PARTITIONS, str(parts))
+        job.conf.set(_AQE, "false")
+    return job
+
+
 def main(argv=None) -> int:
     args = _build_parser().parse_args(argv)
 
+    from pyspark.sql import SparkSession
+
+    from dirt_hadoop_similarity_spark.session import get_spark
+
+    # an existing session is used as it is (get_spark would reapply its
+    # builder options to it); only a process without one builds it
+    spark = SparkSession.getActiveSession() or get_spark(
+        app_name="dirt-cli", master=args.master
+    )
+    job = _job_session(spark, args.corpus, args.shuffle_partitions)
+    cached: list = []
+    try:
+        summary = _run(job, args, cached)
+    finally:
+        # the cache is shared with the caller's session and matches a
+        # text scan by path: left cached, these rows would answer a later
+        # run over a rewritten corpus
+        for df in cached:
+            df.unpersist()
+    print(json.dumps(summary))
+    return 0
+
+
+def _run(spark, args, cached: list) -> dict:
+    """The job body on the job session; appends every relation it caches
+    to ``cached`` and returns the stdout summary."""
     from dirt_hadoop_similarity_spark.functions.phrases import testset_pairs_df
     from dirt_hadoop_similarity_spark.plans import evaluate as ev
     from dirt_hadoop_similarity_spark.plans.pipeline import run_pipeline
-    from dirt_hadoop_similarity_spark.session import get_spark
     from dirt_hadoop_similarity_spark.sources.sinks import write_tsv
 
-    spark = get_spark(
-        app_name="dirt-cli",
-        master=args.master,
-        shuffle_partitions=args.shuffle_partitions,
-    )
     os.makedirs(args.out, exist_ok=True)
 
     pairs = None
@@ -133,6 +194,7 @@ def main(argv=None) -> int:
         pairs = testset_pairs_df(spark, pos, neg, dialect=args.dialect)
 
     res = run_pipeline(spark, args.corpus, pairs_df=pairs)
+    cached += [res.triples, res.mi]
 
     # Job-2 / Job-2.5 artifacts (rounded like the registry queries so the
     # files are engine-stable)
@@ -151,6 +213,7 @@ def main(argv=None) -> int:
 
     if pairs is not None:
         sims = res.sims.cache()
+        cached.append(sims)
         write_tsv(
             sims.orderBy(F.desc("score"), "p1", "p2"),
             os.path.join(args.out, "similarities.tsv"),
@@ -215,8 +278,7 @@ def main(argv=None) -> int:
         summary.update(metrics)
         summary["pairs_found"] = pairs_found
 
-    print(json.dumps(summary))
-    return 0
+    return summary
 
 
 if __name__ == "__main__":

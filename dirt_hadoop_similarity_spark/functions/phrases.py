@@ -26,6 +26,7 @@ import re
 
 from dirt_hadoop_similarity_spark.functions.porter import porter_stem
 from dirt_hadoop_similarity_spark.operators.extraction import AUX_VERBS
+from dirt_hadoop_similarity_spark.session import local_frame
 
 PARTICLES = frozenset(("up", "down", "out", "in", "off", "on", "over", "through"))
 
@@ -110,9 +111,10 @@ def testset_pairs_df(
     dialect: str = "java",
     stem=porter_stem,
 ):
-    """O5: union of positive/negative pair files as a DataFrame
-    ``(p1, p2, label)`` ready for broadcast."""
+    """O5: union of positive/negative pair files as a local-relation
+    DataFrame ``(p1, p2, label)``: broadcasting or collecting it runs no
+    Spark job."""
     rows = compile_pair_file(positive_path, 1, dialect=dialect, stem=stem)
     if negative_path:
         rows += compile_pair_file(negative_path, 0, dialect=dialect, stem=stem)
-    return spark.createDataFrame(rows, "p1 string, p2 string, label int")
+    return local_frame(spark, rows, "p1 string, p2 string, label int")

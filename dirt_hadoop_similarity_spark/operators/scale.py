@@ -82,6 +82,34 @@ def plan_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
+def static_partitions(spark: SparkSession, *relations: DataFrame,
+                      bytes_hint: int | None = None) -> int | None:
+    """The static shuffle-partition count for a small working set, or
+    None when AQE should keep deciding.
+
+    One partition per :data:`LOOP_BYTES_PER_PARTITION` of the relations'
+    Catalyst size estimates (or of ``bytes_hint``), at least 1.  The
+    count is returned only when it lands BELOW the session's
+    ``spark.sql.shuffle.partitions``; at or above it, and for an
+    unknown/unreadable estimate (Catalyst's default for an unknown
+    relation is Long.MaxValue), the answer is None."""
+    total = bytes_hint if bytes_hint is not None else 0
+    if bytes_hint is None:
+        for r in relations:
+            b = plan_size_bytes(r)
+            if b is None:
+                return None
+            total += b
+    try:
+        conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return None
+    derived = max(
+        1, (total + LOOP_BYTES_PER_PARTITION - 1) // LOOP_BYTES_PER_PARTITION
+    )
+    return int(derived) if derived < conf else None
+
+
 class loop_conf:
     """Scope the session for a fixed-shape iterative driver loop whose
     working set is SMALL (guide §2.6/§5: the per-round cost of these
@@ -89,10 +117,11 @@ class loop_conf:
     not data).
 
     Derives a static shuffle-partition count from the loop's standing
-    relations' Catalyst size estimates (one partition per 32 MiB —
-    :data:`LOOP_BYTES_PER_PARTITION`, the input-size heuristic AQE's
-    coalescer applies), clamped to [1, session conf].  When the derived
-    count lands BELOW the session conf (a small loop), the scope pins
+    relations' Catalyst size estimates (:func:`static_partitions`: one
+    partition per 32 MiB — :data:`LOOP_BYTES_PER_PARTITION`, the
+    input-size heuristic AQE's coalescer applies), clamped to [1,
+    session conf].  When the derived count lands BELOW the session
+    conf (a small loop), the scope pins
     ``spark.sql.shuffle.partitions`` to it and disables AQE: every
     exchange inside these loops is explicitly keyed and now statically
     right-sized, so AQE has nothing left to decide — its per-exchange
@@ -113,27 +142,7 @@ class loop_conf:
     def __init__(self, spark: SparkSession, *relations: DataFrame,
                  bytes_hint: int | None = None):
         self.spark = spark
-        total = bytes_hint if bytes_hint is not None else 0
-        if bytes_hint is None:
-            for r in relations:
-                b = plan_size_bytes(r)
-                if b is None:
-                    total = None
-                    break
-                total += b
-        try:
-            conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            conf = None
-        self.parts: int | None = None
-        if conf is not None and total is not None:
-            derived = max(
-                1,
-                (total + LOOP_BYTES_PER_PARTITION - 1)
-                // LOOP_BYTES_PER_PARTITION,
-            )
-            if derived < conf:
-                self.parts = int(derived)
+        self.parts = static_partitions(spark, *relations, bytes_hint=bytes_hint)
 
     def __enter__(self):
         self._saved = None

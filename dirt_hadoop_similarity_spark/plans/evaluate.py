@@ -5,14 +5,17 @@ The evaluation itself is the reference's single-process pass
 (evaluate_dirt.py:103-199), run on the driver: both inputs are bounded by
 the test set (the CLI scores only test pairs, and the gold set is compiled
 in the driver), so a distributed plan would only add per-job overhead.
-The scan and the error samples are handed back as small DataFrames for
-the CSV writer and callers that expect relations.
+The scan and the error samples are handed back as small local-relation
+DataFrames (``session.local_frame``) for the CSV writer and callers that
+expect relations; reading them back runs no Spark job.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from dirt_hadoop_similarity_spark.session import local_frame
 
 SCAN_SCHEMA = (
     "p1 string, p2 string, score double, label int, tp bigint, fp bigint, "
@@ -111,8 +114,8 @@ def evaluate(scored: DataFrame, gold_pairs: DataFrame) -> dict:
     return {
         "metrics": metrics,
         "n_scored": len(rows),
-        "scan": spark.createDataFrame(scan, SCAN_SCHEMA),
+        "scan": local_frame(spark, scan, SCAN_SCHEMA),
         "samples": {
-            k: spark.createDataFrame(v, SAMPLE_SCHEMA) for k, v in classes.items()
+            k: local_frame(spark, v, SAMPLE_SCHEMA) for k, v in classes.items()
         },
     }

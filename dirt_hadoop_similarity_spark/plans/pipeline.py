@@ -11,6 +11,10 @@ every stage (DirtDriver.java:981-1092) collapse into:
 
 The only true barriers are the scalar N collect and the cache points:
 ``triples`` feeds three marginals, ``mi`` feeds both branches.
+
+``run_pipeline`` sets no session conf: every plan runs under the conf of
+the session it is given.  Sizing is the caller's decision; the CLI makes
+it once, on a job-owned session (``__main__._job_session``).
 """
 
 from __future__ import annotations
@@ -78,26 +82,24 @@ def run_pipeline(
         biarcs = parse_biarc_lines(corpus)
     parsed = rebalance_for_extraction(with_tokens(biarcs), spark)
 
-    # `parsed` is scan-rooted, so its Catalyst estimate is the corpus's
-    # real byte size — size the aggregate/join exchanges (and the cached
-    # plans compiled inside the scope) statically off it instead of
-    # paying AQE's stage-materialization job per exchange on a small
-    # corpus (scale.loop_conf; no-op at cluster volume, where AQE keeps
-    # the skew/join machinery this DAG then genuinely wants)
-    from dirt_hadoop_similarity_spark.operators.scale import loop_conf
+    triples = counting.triples(facts(extractions(parsed)))
+    if cache:
+        triples = triples.cache()
 
-    with loop_conf(spark, parsed):
-        triples = counting.triples(facts(extractions(parsed)))
-        if cache:
-            triples = triples.cache()
-
-        sw = counting.word_margins(triples)
-        ps = counting.path_margins(triples)
+    sw = counting.word_margins(triples)
+    ps = counting.path_margins(triples)
+    try:
         n_total = counting.global_n(triples)
-
-        mi_df = mi_ops.mi_table(triples, sw, ps, n_total)
+    except BaseException:
+        # the pipeline's one action: on failure the caller gets no
+        # handle to release the cache it registered
         if cache:
-            mi_df = mi_df.cache()
+            triples.unpersist()
+        raise
+
+    mi_df = mi_ops.mi_table(triples, sw, ps, n_total)
+    if cache:
+        mi_df = mi_df.cache()
     sum_mi_df = mi_ops.sum_mi(mi_df)
 
     sims = None

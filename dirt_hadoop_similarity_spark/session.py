@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType
 
 
 def get_spark(
@@ -50,6 +51,23 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """A DataFrame over driver-side rows (tuples in ``schema``'s column
+    order), planned as a local relation.
+
+    ``createDataFrame(list)`` parallelizes the rows into
+    ``defaultParallelism`` pickled slices, so every read of the result is
+    a Spark job with Python tasks.  An Arrow table smaller than
+    ``spark.sql.execution.arrow.localRelationThreshold`` becomes a
+    ``LocalRelation``: collecting it runs no job, and broadcasting it is
+    a driver-side copy."""
+    import pyarrow as pa
+
+    names = DataType.fromDDL(schema).names
+    table = pa.table({n: [r[i] for r in rows] for i, n in enumerate(names)})
+    return spark.createDataFrame(table, schema)
 
 
 def require_fixed_offset_tz(spark: SparkSession | None = None) -> str:

@@ -5,6 +5,7 @@ metrics are exact: the only score>0 pair is (chase, pursue) which is the
 gold positive → optimal threshold gives P = R = F1 = 1.0.
 """
 
+import contextlib
 import glob
 import json
 
@@ -242,3 +243,86 @@ def test_curate_cli_bad_chunk_spec(sf_dir, tmp_path):
     with pytest.raises(SystemExit):
         curate_main([sf_dir, "--out", str(tmp_path / "x"),
                      "--chunk", "64:ab"])
+
+
+PARTITIONS = "spark.sql.shuffle.partitions"
+AQE = "spark.sql.adaptive.enabled"
+
+
+@contextlib.contextmanager
+def caller_conf(spark, **conf):
+    """Set the caller's session conf for one test and restore it."""
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def _run_with_testset(tmp_path, tag, *extra):
+    corpus = tmp_path / f"corpus_{tag}.txt"
+    corpus.write_text("\n".join(CORPUS) + "\n")
+    pos = tmp_path / f"p_{tag}.txt"
+    pos.write_text("X chase Y\tX pursue Y\n")
+    neg = tmp_path / f"n_{tag}.txt"
+    neg.write_text("X chase Y\tX die from Y\n")
+    out = tmp_path / f"out_{tag}"
+    rc = cli_main(
+        [str(corpus), "--testset", str(pos), str(neg), "--out", str(out),
+         *extra]
+    )
+    assert rc == 0
+    return out
+
+
+def test_cli_second_run_reads_rewritten_corpus(spark, tmp_path, capsys):
+    # the job's cached relations are released: a second in-process run
+    # over the same path must not answer from the first run's cache
+    corpus = tmp_path / "corpus5.txt"
+    out = tmp_path / "out5"
+    summaries = []
+    for weight in (1, 4):
+        lines = []
+        for line in CORPUS:
+            fields = line.split("\t")
+            fields[2] = str(int(fields[2]) * weight)
+            lines.append("\t".join(fields))
+        corpus.write_text("\n".join(lines) + "\n")
+        assert cli_main([str(corpus), "--out", str(out)]) == 0
+        summaries.append(
+            json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        )
+    assert [s["global_n"] for s in summaries] == [16, 64]
+
+
+def test_cli_leaves_caller_session_conf_unchanged(spark, tmp_path):
+    with caller_conf(spark, **{PARTITIONS: "7", AQE: "false"}):
+        _run_with_testset(tmp_path, "conf")
+        assert spark.conf.get(PARTITIONS) == "7"
+        assert spark.conf.get(AQE) == "false"
+
+
+def test_cli_shuffle_partitions_is_static(spark, tmp_path):
+    # an explicit value is the job's partition count: the MI table keeps
+    # its 3 shuffle partitions (a derived count would be 1, and AQE
+    # would coalesce)
+    out = _run_with_testset(tmp_path, "parts", "--shuffle-partitions", "3")
+    assert len(glob.glob(str(out / "mi.tsv" / "part-*"))) == 3
+
+
+def test_cli_runs_a_fixed_number_of_spark_jobs(spark, tmp_path):
+    # every plan of the job runs under its one sizing decision; a plan
+    # that escapes it runs under the caller's AQE and adds stage jobs
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job():
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    with caller_conf(spark, **{PARTITIONS: "32", AQE: "true"}):
+        before = last_job()
+        _run_with_testset(tmp_path, "jobs")
+        jobs = [j for j in tracker.getJobIdsForGroup(None) if j > before]
+    assert len(jobs) == 11, jobs

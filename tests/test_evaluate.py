@@ -154,3 +154,21 @@ def test_system_output_drops_malformed_lines(spark, tmp_path):
     out = load_system_output(spark, str(tmp_path)).collect()
     pairs = {(r.p1, r.p2) for r in out}
     assert pairs == {("a", "b"), ("c", "d")}, pairs
+
+
+def test_local_frame_is_a_local_relation(spark):
+    from dirt_hadoop_similarity_spark.plans.evaluate import SAMPLE_SCHEMA
+    from dirt_hadoop_similarity_spark.session import local_frame
+
+    rows = [("a", "b", 0.5, 1), ("c", "d", 0.0, 0)]
+    df = local_frame(spark, rows, SAMPLE_SCHEMA)
+    assert df.schema.simpleString() == (
+        "struct<p1:string,p2:string,score:double,label:int>"
+    )
+    assert [tuple(r) for r in df.collect()] == rows
+    # no parallelized slices: the plan is a scan of driver-held rows
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.lstrip("*( 0123456789)").startswith("LocalTableScan"), plan
+    empty = local_frame(spark, [], SAMPLE_SCHEMA)
+    assert empty.columns == ["p1", "p2", "score", "label"]
+    assert empty.collect() == []

@@ -212,3 +212,45 @@ def test_full_pipeline_stem_table_covers_live_vocab(sf_dir):
         }
         missing = vocab - set(FULL_PIPE_STEMS)
         assert not missing, f"{d}: vocabulary not in FULL_PIPE_STEMS: {missing}"
+
+
+def test_run_pipeline_sets_no_conf(spark, tmp_path):
+    # every plan runs under the conf it is given: sizing is the caller's
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    saved = {k: spark.conf.get(k) for k in keys}
+    given = dict(zip(keys, ("5", "false")))
+    corpus = tmp_path / "corpus.txt"
+    corpus.write_text("\n".join(CORPUS) + "\n")
+    try:
+        for k, v in given.items():
+            spark.conf.set(k, v)
+        res = run_pipeline(spark, str(corpus))
+        try:
+            assert {k: spark.conf.get(k) for k in keys} == given
+            assert res.triples.rdd.getNumPartitions() == 5
+            assert res.mi.rdd.getNumPartitions() == 5
+        finally:
+            res.triples.unpersist()
+            res.mi.unpersist()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def test_run_pipeline_releases_its_cache_when_global_n_fails(
+    spark, tmp_path, monkeypatch
+):
+    from dirt_hadoop_similarity_spark.operators import counting
+
+    seen = []
+
+    def failing_global_n(triples):
+        seen.append(triples)
+        raise RuntimeError("global_n failed")
+
+    monkeypatch.setattr(counting, "global_n", failing_global_n)
+    corpus = tmp_path / "corpus.txt"
+    corpus.write_text("\n".join(CORPUS) + "\n")
+    with pytest.raises(RuntimeError, match="global_n failed"):
+        run_pipeline(spark, str(corpus))
+    assert not seen[0].storageLevel.useMemory

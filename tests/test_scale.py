@@ -714,3 +714,27 @@ def test_date_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
         )
     ) == 1
     assert scan_partitions(lambda: spark.read.parquet(path)) > 1
+
+
+def test_static_partitions_saturates_at_session_conf(spark):
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    saved = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set(keys[1], "true")
+    try:
+        conf = int(saved[keys[0]])
+        cap = conf * scale.LOOP_BYTES_PER_PARTITION
+        # below the cap: a static count, one partition per 32 MiB
+        assert scale.static_partitions(spark, bytes_hint=1) == 1
+        below = cap - scale.LOOP_BYTES_PER_PARTITION
+        assert scale.static_partitions(spark, bytes_hint=below) == conf - 1
+        assert scale.loop_conf(spark, bytes_hint=below).parts == conf - 1
+        # at or above it the scope sets nothing and AQE stays on
+        for hint in (cap, 4 * cap):
+            assert scale.static_partitions(spark, bytes_hint=hint) is None
+            with scale.loop_conf(spark, bytes_hint=hint) as lc:
+                assert lc.parts is None
+                assert spark.conf.get(keys[0]) == saved[keys[0]]
+                assert spark.conf.get(keys[1]) == "true"
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
