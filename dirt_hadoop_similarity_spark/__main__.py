@@ -26,6 +26,9 @@ Sizing and cache:
   * Every relation the job caches (triples, MI, similarities) is
     released when main returns or raises.
 
+A corpus or test-set file that does not exist is reported in one line on
+stderr with exit status 2, before Spark starts or --out is created.
+
 Outputs under --out (created if needed):
     similarities.tsv/   p1 \t p2 \t score   (Job-4 final output, F5 export)
     mi.tsv/             path \t slot \t word \t mi     (Job-2 output)
@@ -38,6 +41,7 @@ Outputs under --out (created if needed):
 from __future__ import annotations
 
 import argparse
+import glob
 import json
 import os
 import sys
@@ -128,6 +132,20 @@ def _fmt_pairs(rows) -> str:
     )
 
 
+def _missing_input(args) -> str | None:
+    """The first input that names nothing on the local file system, as a
+    one-line message.  A corpus URI (``scheme://``) or Hadoop brace glob
+    is left for Spark to resolve."""
+    corpus = args.corpus
+    local = "://" not in corpus and "{" not in corpus
+    if local and not (os.path.exists(corpus) or glob.glob(corpus)):
+        return f"corpus not found: {corpus}"
+    for path in args.testset or ():
+        if not os.path.isfile(path):
+            return f"testset file not found: {path}"
+    return None
+
+
 def _job_session(spark, corpus: str, shuffle_partitions: int | None):
     """The job's one sizing decision, on a session of its own.
 
@@ -153,7 +171,12 @@ def _job_session(spark, corpus: str, shuffle_partitions: int | None):
 
 
 def main(argv=None) -> int:
-    args = _build_parser().parse_args(argv)
+    parser = _build_parser()
+    args = parser.parse_args(argv)
+    missing = _missing_input(args)
+    if missing:
+        print(f"{parser.prog}: {missing}", file=sys.stderr)
+        return 2
 
     from pyspark.sql import SparkSession
 

@@ -195,10 +195,3 @@ def _stem_uncached(word: str) -> str:
     w = _step4(w)
     w = _step5(w)
     return w
-
-
-def porter_stem_udf():
-    """Arrow-vectorized pandas UDF: STRING -> STRING stem column."""
-    from dirt_hadoop_similarity_spark.functions._udf_wrappers import make_series_udf
-
-    return make_series_udf(porter_stem, passthrough_null=True)

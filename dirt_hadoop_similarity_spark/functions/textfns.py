@@ -66,10 +66,6 @@ def stopword_ratio_from(ltoks: Column) -> Column:
     ).otherwise(0.0)
 
 
-def stopword_ratio(text: Column) -> Column:
-    return stopword_ratio_from(tokens(F.lower(text)))
-
-
 def punct_ratio(text: Column) -> Column:
     stripped = F.regexp_replace(text, "[^A-Za-z0-9\\s]", "")
     return F.when(
@@ -89,25 +85,17 @@ def mean_word_length_from(toks: Column) -> Column:
     ).otherwise(0.0)
 
 
-def mean_word_length(text: Column) -> Column:
-    return mean_word_length_from(tokens(text))
-
-
 def quality_score_from(toks: Column, ltoks: Column, text: Column) -> Column:
-    """quality_score over pre-tokenized arrays (see stopword_ratio_from
-    for why): only punct_ratio still touches the raw text."""
+    """Composite quality heuristic in [0, 1] over pre-tokenized arrays
+    (see stopword_ratio_from for why): rewards mid-length documents with
+    low punctuation noise and a natural stopword rate.  The exact formula
+    is arbitrary by design — the operator contract is determinism.  Only
+    punct_ratio still touches the raw text."""
     n_tok = F.size(toks).cast("double")
     length_term = F.least(n_tok / 100.0, F.lit(1.0))
     punct_term = 1.0 - F.least(punct_ratio(text) * 5.0, F.lit(1.0))
     stop_term = F.least(stopword_ratio_from(ltoks) * 4.0, F.lit(1.0))
     return F.round((length_term + punct_term + stop_term) / 3.0, 6)
-
-
-def quality_score(text: Column) -> Column:
-    """Composite heuristic in [0, 1]: rewards mid-length documents with
-    low punctuation noise and a natural stopword rate.  The exact formula
-    is arbitrary by design — the operator contract is determinism."""
-    return quality_score_from(tokens(text), tokens(F.lower(text)), text)
 
 
 def _marker_hits(toks: Column, markers: tuple[str, ...]) -> Column:
@@ -119,39 +107,13 @@ def _marker_hits(toks: Column, markers: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, pred))
 
 
-def lang_scores(text: Column) -> dict[str, Column]:
-    toks = tokens(F.lower(text))
-    return {
-        lang: _marker_hits(toks, markers)
-        for lang, markers in LANG_MARKERS.items()
-    }
-
-
-def lang_id_from(ltoks: Column) -> Column:
-    """lang_id over a pre-tokenized lowercase token array (see
-    stopword_ratio_from for why).  argmax over marker-word hit counts;
-    ties and zero-hit docs → 'und'.
-
-    Reference-count caveat: the argmax embeds each language's score in
-    ~2(L-1) comparison sites, and each score is an interpreted HOF
-    filter over ``ltoks`` — so even over a bound array this runs
-    L·~2(L-1) filters per row, and over an UNBOUND expression it
-    re-tokenizes at every site.  Callers on a hot path should bind the
-    scores as columns first (:func:`lang_scores` shapes) and combine
-    with :func:`lang_id_from_scores` — measured 0.43x on the text_langid
-    query at sf0.1."""
-    return lang_id_from_scores({
-        lang: _marker_hits(ltoks, markers)
-        for lang, markers in LANG_MARKERS.items()
-    })
-
-
 def lang_id_from_scores(scores: dict[str, "Column"]) -> Column:
-    """The lang_id argmax over per-language hit-count expressions — pass
-    BOUND columns (one cheap reference per comparison site) for the hot
-    path; semantics identical to :func:`lang_id_from`: a language wins
-    iff its count is strictly greater than every other's and > 0, else
-    'und'."""
+    """Language-ID argmax over per-language marker-hit counts
+    (``_marker_hits`` per :data:`LANG_MARKERS` entry).  Pass BOUND
+    columns: each score sits at ~2(L-1) comparison sites, so an unbound
+    HOF expression would re-run at every one.  A language wins iff its
+    count is strictly greater than every other's and > 0; ties and
+    zero-hit docs are 'und'."""
     langs = list(scores)
     result = F.lit("und")
     # build nested WHEN: lang wins iff its count > all others and > 0
@@ -162,13 +124,6 @@ def lang_id_from_scores(scores: dict[str, "Column"]) -> Column:
                 cond = cond & (scores[lang] > scores[other])
         result = F.when(cond, F.lit(lang)).otherwise(result)
     return result
-
-
-def lang_id(text: Column) -> Column:
-    """argmax over marker-word hit counts; ties and zero-hit docs →
-    'und' (undetermined).  Deterministic tiebreak: a language wins only
-    with a strictly greater count than every other."""
-    return lang_id_from(tokens(F.lower(text)))
 
 
 def fingerprint(text: Column) -> Column:
@@ -316,14 +271,6 @@ def classifier_logit_from(toks: Column, ltoks: Column, text: Column,
         + w["punct_ratio"] * punct_ratio(text)
         + w["mean_word_len"] * (mean_word_length_from(toks) / 10.0)
     )
-
-
-def classifier_keep(text: Column, threshold: float = 0.0,
-                    weights: dict[str, float] | None = None) -> Column:
-    """Keep decision of the quality model at a logit threshold."""
-    t = tokens(text)
-    return classifier_logit_from(t, tokens(F.lower(text)), text,
-                                 weights) > threshold
 
 
 # ---------------------------------------------------------------------------

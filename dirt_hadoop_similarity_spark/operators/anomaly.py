@@ -33,9 +33,8 @@ small parquet table); :func:`score` joins any batch of rows against the
 persisted stats and computes z in the projection — map-side only once
 the stats side broadcasts, which it always does (|keys| rows).  This is
 the same train-offline / score-at-ingest split as ``operators/lm``:
-``streaming/events.run_anomaly_score_stream`` scores micro-batches
-against the fixed stats table, and stream output == :func:`score` on
-the same rows regardless of batch splits.
+a micro-batch scored against the fixed stats table gives the same rows
+as :func:`score` on the whole input, regardless of batch splits.
 """
 
 from __future__ import annotations

@@ -289,25 +289,6 @@ def connected_components_star(edges: DataFrame, src: str = "id_a",
     return out
 
 
-def duplicate_clusters(edges: DataFrame, src: str = "id_a",
-                       dst: str = "id_b", max_iter: int = 25) -> DataFrame:
-    """Cluster roll-up: (component, n_members, keeper_id, member_ids).
-
-    ``keeper_id`` (the min member == the component label) is the row a
-    keep-the-oldest dedup retains; everything else in ``member_ids`` is
-    droppable.  ``member_ids`` is sorted for deterministic output.
-    """
-    comp = connected_components(edges, src=src, dst=dst, max_iter=max_iter)
-    return (
-        comp.groupBy("component")
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.min("node").alias("keeper_id"),
-            F.array_sort(F.collect_list("node")).alias("member_ids"),
-        )
-    )
-
-
 def _auto_salt(deg: DataFrame, slots: int, salt: int = 8) -> int:
     """The pagerank salt router: salting engages when the max degree
     reaches ``slots`` × the average degree — key_skew_profile's

@@ -19,8 +19,8 @@ Scale design (the part that must survive 100 TB):
     32-byte key, no global sort, no driver state.  The lazy plan
     computes this window once per consumer (the flag branch and the
     near-dup branch); a real 100 TB run materializes the exact-deduped
-    corpus between stages (sinks.checkpoint_parquet) as stage outputs
-    are checkpointed anyway, making it one shuffle total.
+    corpus between stages, as stage outputs are checkpointed anyway,
+    making it one shuffle total.
   * near-dup candidate generation runs ON the exact-deduped survivors,
     deliberately: exact-duplicate clusters share identical MinHash
     signatures, so running LSH pre-dedup inflates band buckets
@@ -96,7 +96,7 @@ def annotate(docs: DataFrame, *, near_dup_min_est_jaccard: float = 0.5,
     exact-dedup survivors) and the final flag join — without a cut it
     computes twice per evaluation.  Caching it here is the local-mode
     rendering of the checkpoint a real 100 TB run takes anyway (the
-    exact-deduped survivors are a stage output, sinks.checkpoint_parquet).
+    exact-deduped survivors are a stage output).
     """
     t = F.col(text_col)
     keeper = Window.partitionBy(F.md5(t))
@@ -111,7 +111,7 @@ def annotate(docs: DataFrame, *, near_dup_min_est_jaccard: float = 0.5,
         textfns.tokens(t).alias("_toks"),
         textfns.tokens(F.lower(t)).alias("_ltoks"),
     )
-    # bind the per-language marker counts too: lang_id_from's argmax
+    # bind the per-language marker counts too: the language-ID argmax
     # references each score at ~2(L-1) comparison sites, and each score
     # is an interpreted HOF filter over _ltoks — bound once here, the
     # argmax compares cheap int columns (the r13 text_langid fix,
@@ -172,37 +172,6 @@ def annotate(docs: DataFrame, *, near_dup_min_est_jaccard: float = 0.5,
                 & (F.col("quality") >= min_quality)
             ).alias("keep_quality"),
         )
-    )
-
-
-def quality_gate(docs: DataFrame, *, min_quality: float = 0.35,
-                 langs: tuple[str, ...] = ("en",),
-                 text_col: str = "text") -> DataFrame:
-    """The funnel's quality + language predicate as a STATELESS filter:
-    no window, no state, no shuffle — which means it runs unchanged on a
-    streaming input (gate documents at ingest time, before they ever
-    land in the corpus) as well as in the batch funnel.  Adds
-    ``quality`` and ``predicted_lang`` to the surviving rows.
-
-    Exact dedup / near-dup / budget stages are deliberately NOT here:
-    they need corpus-wide state and belong to the batch (or
-    watermark-bounded) passes.
-    """
-    t = F.col(text_col)
-    gated = docs.select(
-        "*",
-        textfns.tokens(t).alias("_toks"),
-        textfns.tokens(F.lower(t)).alias("_ltoks"),
-    ).select(
-        *docs.columns,
-        textfns.quality_score_from(
-            F.col("_toks"), F.col("_ltoks"), t
-        ).alias("quality"),
-        textfns.lang_id_from(F.col("_ltoks")).alias("predicted_lang"),
-    )
-    return gated.filter(
-        F.col("predicted_lang").isin(*langs)
-        & (F.col("quality") >= min_quality)
     )
 
 
@@ -420,9 +389,8 @@ def redact_and_score(docs: DataFrame, threshold: float = 0.0,
     """Stateless ingest transform: PII-redact the text, then attach the
     quality-model logit and keep decision (scored over the REDACTED
     text — the corpus stores what was scored).  No state, no window, so
-    it runs identically on a static or streaming DataFrame; pair it
-    with `quality_gate` on the landing stream and leave the stateful
-    passes (dedup, budget) to downstream batch.
+    it runs identically on a static or streaming DataFrame; leave the
+    stateful passes (dedup, budget) to downstream batch.
     """
     red = textfns.pii_redact(F.col(text_col))
     out = docs.withColumn(text_col, red)

@@ -50,11 +50,6 @@ def hash60(col, seed: int | None = None):
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
 
 
-def hash60_sql(expr: str, seed: int | None = None) -> str:
-    inner = f"'{seed}|' || {expr}" if seed is not None else expr
-    return f"CAST(('0x' || substr(md5({inner}), 1, 15)) AS UBIGINT)::BIGINT"
-
-
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
@@ -171,48 +166,6 @@ def minhash_signatures(shingles: DataFrame, num_hashes: int = 8,
     return hashed.groupBy(id_col).agg(*aggs)
 
 
-def lsh_candidates(signatures: DataFrame, bands: int = 4,
-                   rows_per_band: int = 2, id_col: str = "doc_id") -> DataFrame:
-    """Banded-LSH candidate pairs: docs agreeing on all rows of at least
-    one band → (id_a, id_b, n_bands_matched).
-
-    The join is an equi-join on (band_index, band_key): at scale each
-    bucket holds only near-duplicates, so the pair blow-up is bounded by
-    real duplication, not corpus size.
-    """
-    num_hashes = bands * rows_per_band
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    ":",
-                    *[F.col(f"h{b * rows_per_band + r}").cast("string")
-                      for r in range(rows_per_band)],
-                ).alias("key"),
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = signatures.select(
-        F.col(id_col), F.explode(band_structs).alias("bk")
-    ).select(id_col, "bk.band", "bk.key")
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_bands_matched"))
-    )
-
-
 def _banded_with_sigs(signatures: DataFrame, bands: int, rows_per_band: int,
                       id_col: str) -> DataFrame:
     """Explode a signature relation to (id, h0..hk, band, key) — the band
@@ -248,32 +201,6 @@ def signature_index(docs: DataFrame, n: int = 3, num_hashes: int = 8,
     return minhash_signatures(
         word_shingles(docs, n=n, text_col=text_col, id_col=id_col),
         num_hashes=num_hashes, id_col=id_col,
-    )
-
-
-def compact_signature_index(spark, new_docs: DataFrame, index_path: str,
-                            out_path: str, n: int = 3, num_hashes: int = 8,
-                            text_col: str = "text",
-                            id_col: str = "doc_id") -> None:
-    """Nightly index compaction: merge a day's accepted documents into
-    the persisted signature index as a NEW snapshot at ``out_path``.
-
-    Only the new docs are shingled+hashed; the existing index is read
-    as-is (never recomputed).  The merge dedupes by id with the
-    EXISTING row winning, so re-running a day's compaction is
-    idempotent — critical because duplicated index rows would inflate
-    ``incremental_near_duplicates``'s ``n_bands_matched``.  Writing a
-    fresh snapshot (swap the reader's path, then delete the old one)
-    rather than appending in place keeps readers consistent and makes
-    the operation atomic at the directory level.
-    """
-    existing = spark.read.parquet(index_path)
-    new_sigs = signature_index(
-        new_docs, n=n, num_hashes=num_hashes, text_col=text_col,
-        id_col=id_col,
-    ).join(existing.select(id_col), id_col, "left_anti")
-    existing.unionByName(new_sigs).write.mode("errorifexists").parquet(
-        out_path
     )
 
 
@@ -448,7 +375,7 @@ def jaccard_pairs(docs: DataFrame, n: int = 3, min_jaccard: float = 0.0,
 
     Shuffle is keyed on the shingle; pairs that share nothing never meet.
     At 100 TB this runs downstream of LSH candidates, not standalone —
-    compose with a semi-join against ``lsh_candidates`` output.
+    compose with a semi-join against the banded candidate pairs.
     """
     # the shingle relation feeds the self-join (both sides) and the size
     # table — cache so tokenization + dedup runs once, not three times
@@ -574,50 +501,6 @@ def simhash(docs: DataFrame, bits: int = 16, text_col: str = "text",
         for i in range(bits)
     )
     return per_bit.select(F.col(id_col), fingerprint.cast("long").alias("simhash"))
-
-
-def simhash_near_duplicates(docs: DataFrame, bits: int = 16,
-                            max_hamming: int = 3, text_col: str = "text",
-                            id_col: str = "doc_id") -> DataFrame:
-    """Pairs whose SimHash fingerprints differ in ≤ max_hamming bits.
-
-    Joins on fingerprint bands (two halves) so at scale candidates meet
-    only when one half matches exactly (valid for max_hamming < bits/2
-    splits by pigeonhole when max_hamming ≤ 1 per half; for the general
-    case increase the number of bands)."""
-    fp = simhash(docs, bits=bits, text_col=text_col, id_col=id_col)
-    half = bits // 2
-    lo = F.col("simhash").bitwiseAND(F.lit((1 << half) - 1))
-    hi = F.shiftright(F.col("simhash"), half)
-    banded = fp.select(
-        id_col, "simhash",
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("band"), lo.alias("key")),
-                F.struct(F.lit(1).alias("band"), hi.alias("key")),
-            )
-        ).alias("bk"),
-    ).select(id_col, "simhash", "bk.band", "bk.key")
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return pairs.select(
-        "id_a", "id_b", hamming.cast("int").alias("hamming")
-    ).filter(F.col("hamming") <= max_hamming)
 
 
 def threshold_sweep(pairs: DataFrame, num_hashes: int = 8,

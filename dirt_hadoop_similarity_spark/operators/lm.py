@@ -13,8 +13,7 @@ broadcast of a corpus-vocab model.  Quantizing before the per-document
 sum (the quantized_cosine trick) makes scores exact integer arithmetic:
 order-independent across partitionings and engines, value-checkable by
 the DuckDB oracle.  Because a document's score depends only on (model,
-document), scoring is micro-batch independent — the streaming runner in
-``streaming/corpus.py`` reuses :func:`score_documents` verbatim.
+document), scoring is micro-batch independent.
 """
 
 from __future__ import annotations
@@ -30,9 +29,9 @@ MICRO = 1_000_000
 #: tracked caches (the textsim release_caches contract): the scoring
 #: operators cache relations their returned lazy plans still read, so
 #: they cannot unpersist eagerly.  Long-lived sessions — and especially
-#: the per-micro-batch scorer in streaming/corpus.run_lm_score_stream,
-#: which otherwise leaks two cached relations PER BATCH — call
-#: :func:`release_caches` after materializing the consumers.
+#: a per-micro-batch scorer, which otherwise leaks two cached relations
+#: PER BATCH — call :func:`release_caches` after materializing the
+#: consumers.
 _CACHES = CacheTracker()
 
 

@@ -31,9 +31,8 @@ def mi_table(
     word_margins_df: DataFrame,
     path_margins_df: DataFrame,
     n_total: int,
-    threshold: float = MI_THRESHOLD,
 ) -> DataFrame:
-    """J1+J2+F6+P6 → ``(path, slot, word, mi)`` with mi > threshold."""
+    """J1+J2+F6+P6 → ``(path, slot, word, mi)`` with mi > MI_THRESHOLD."""
     sw = F.broadcast(word_margins_df.withColumnRenamed("n", "sw_n"))
     ps = path_margins_df.withColumnRenamed("n", "ps_n")
     joined = triples_df.join(sw, ["slot", "word"], "inner").join(
@@ -45,7 +44,7 @@ def mi_table(
     return (
         joined.filter((numerator > 0) & (denominator > 0))
         .select("path", "slot", "word", mi.alias("mi"))
-        .filter(F.col("mi") > threshold)
+        .filter(F.col("mi") > MI_THRESHOLD)
     )
 
 

@@ -5,11 +5,9 @@ Decode is split at the line the formats themselves draw:
   * ``decode_metadata(decoder="real")`` performs REAL container-header
     decode, stdlib-only — PNG/JPEG/GIF/BMP dimensions and channel
     counts parsed from the header bytes (``_real_dims``), unknown or
-    torn headers quarantined as NULL-metadata rows; the audio twin
-    (``decode_audio_metadata``) covers WAV/AIFF/FLAC/MP3 headers and
-    the video twin (``decode_video_metadata``) walks the MP4/ISO-BMFF
-    box tree.  Header parsing never decompresses payloads, which is
-    exactly how a 100 TB metadata pass works in production.
+    torn headers quarantined as NULL-metadata rows.  Header parsing
+    never decompresses payloads, which is exactly how a 100 TB
+    metadata pass works in production.
   * ``decode_pixels(decoder="real")`` performs REAL pixel/sample
     decode, dependency-free — PNG (zlib inflate + per-row unfilter +
     Adam7 + palette expansion), GIF (pure-Python LZW + palette +
@@ -18,12 +16,12 @@ Decode is split at the line the formats themselves draw:
     (canonical Huffman + numpy IDCT + libjpeg-parity chroma
     upsampling, verified against javax.imageio) — emitting a uniform
     raw-tensor row.  Only arithmetic-coded/lossless JPEG remains
-    codec-bound (``inflate_entropy_coded``); those rows quarantine
-    with real header dims + NULL pixels.
+    codec-bound; those rows quarantine with real header dims + NULL
+    pixels.
   * ``decoder="fake"`` (opt-in; what the synthetic testdata exercises
     — its payloads are utf-8 text, not image containers) derives
     deterministic metadata/features from md5(payload).  ``"real"`` is
-    the DEFAULT on all four entry points: a naive call on real media
+    the DEFAULT on both entry points: a naive call on real media
     bytes gets the verified decoders, never silent pseudo-metadata.
 
 Everything around that split is real, scale-correct Spark:
@@ -47,24 +45,12 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "media_id long, kind string, payload binary, "
-    "meta struct<source:string,n_bytes:long>"
-)
-
 DECODED_SCHEMA = (
     "media_id long, kind string, width int, height int, channels int, "
     "n_bytes long"
 )
 
 FEATURES_SCHEMA = "media_id long, feature array<float>"
-
-FRAMES_SCHEMA = "media_id long, frame_index int, frame_payload binary"
-
-AUDIO_SCHEMA = (
-    "media_id long, kind string, sample_rate int, channels int, "
-    "bits int, n_frames long, n_bytes long"
-)
 
 
 def documents_as_media(docs: DataFrame, kind: str = "image") -> DataFrame:
@@ -245,38 +231,6 @@ def _tiff_dims(payload: bytes):
         return none
 
 
-def _ogg_audio_meta(payload: bytes):
-    """OGG header decode, stdlib-only: the first page's first packet
-    identifies the codec — Vorbis ('\\x01vorbis': channels + rate) or
-    Opus ('OpusHead': channels + input rate).  Frame count needs a
-    last-page scan and bit depth is codec-internal, so both stay
-    NULL."""
-    import struct
-
-    none = (None, None, None, None)
-    try:
-        if payload[:4] != b"OggS" or payload[4] != 0:
-            return none
-        nseg = payload[26]
-        p = 27 + nseg  # past the segment table
-        pkt = payload[p:p + 64]
-        if pkt[:7] == b"\x01vorbis":
-            ch = pkt[11]
-            (rate,) = struct.unpack("<I", pkt[12:16])
-            if rate == 0 or ch == 0:
-                return none
-            return rate, ch, None, None
-        if pkt[:8] == b"OpusHead":
-            ch = pkt[9]
-            (rate,) = struct.unpack("<I", pkt[12:16])
-            if rate == 0 or ch == 0:
-                return none
-            return rate, ch, None, None
-        return none
-    except (struct.error, IndexError):
-        return none
-
-
 def _wav_meta(payload: bytes):
     """REAL WAV (RIFF/WAVE) header decode, stdlib-only: walk the chunk
     stream for 'fmt ' (channels, sample rate, bit depth) and 'data'
@@ -330,312 +284,6 @@ def _wav_meta(payload: bytes):
         return rate, ch, bits, n_frames
     except (struct.error, IndexError):
         return none
-
-
-def _aiff_meta(payload: bytes):
-    """REAL AIFF (FORM/AIFF, big-endian IFF) header decode, stdlib-only:
-    the COMM chunk carries channels, frame count, bit depth and the
-    sample rate as an 80-bit IEEE 754 extended float (sign + 15-bit
-    exponent + 64-bit mantissa with explicit integer bit).  Same
-    (rate, channels, bits, n_frames) tuple and NULL-quarantine contract
-    as :func:`_wav_meta`."""
-    import struct
-
-    none = (None, None, None, None)
-    try:
-        if payload[:4] != b"FORM" or payload[8:12] != b"AIFF":
-            return none
-        i = 12
-        while i + 8 <= len(payload):
-            tag = payload[i:i + 4]
-            (size,) = struct.unpack(">I", payload[i + 4:i + 8])
-            if tag == b"COMM":
-                ch, n_frames, bits = struct.unpack(
-                    ">hIh", payload[i + 8:i + 16])
-                exp, mant = struct.unpack(">HQ", payload[i + 16:i + 26])
-                if mant == 0:
-                    return none
-                sign = -1 if exp & 0x8000 else 1
-                rate = sign * mant * 2.0 ** ((exp & 0x7FFF) - 16383 - 63)
-                if not 1 <= rate <= 10_000_000:
-                    return none
-                if ch < 1 or bits < 1:
-                    return none  # signed fields, never valid <= 0
-                return int(round(rate)), ch, bits, n_frames
-            i += 8 + size + (size & 1)  # IFF even-padding rule
-        return none
-    except (struct.error, IndexError):
-        return none
-
-
-def _flac_meta(payload: bytes):
-    """REAL FLAC header decode, stdlib-only: STREAMINFO (the mandatory
-    first metadata block) bit-packs sample rate (20 bits), channels-1
-    (3), bits-per-sample-1 (5) and total samples (36) into 8 bytes."""
-    none = (None, None, None, None)
-    try:
-        if payload[:4] != b"fLaC":
-            return none
-        if payload[4] & 0x7F != 0:  # STREAMINFO must come first
-            return none
-        blen = int.from_bytes(payload[5:8], "big")
-        si = payload[8:8 + blen]
-        if blen < 34 or len(si) < 34:
-            return none
-        v = int.from_bytes(si[10:18], "big")
-        rate = v >> 44
-        ch = ((v >> 41) & 0x7) + 1
-        bits = ((v >> 36) & 0x1F) + 1
-        n_frames = v & ((1 << 36) - 1)
-        if rate == 0:
-            return none
-        return rate, ch, bits, n_frames or None
-    except IndexError:
-        return none
-
-
-#: MPEG audio sample-rate tables by version bits (3=MPEG1, 2=MPEG2,
-#: 0=MPEG2.5) and 2-bit sample-rate index
-_MP3_RATES = {
-    3: (44100, 48000, 32000),
-    2: (22050, 24000, 16000),
-    0: (11025, 12000, 8000),
-}
-
-
-def _mp3_meta(payload: bytes):
-    """REAL MPEG-audio (MP3) first-frame header decode, stdlib-only:
-    skip an ID3v2 tag (syncsafe size), find the 11-bit frame sync in
-    the 4 KiB after it, and read version/sample-rate/channel-mode.
-    The dispatch gate (:func:`_audio_meta_real`) only routes payloads
-    that START with an ID3 tag or a frame sync — a global sniff would
-    misclassify arbitrary binaries whose first bytes happen to look
-    like a sync, so leading junk without an ID3 tag quarantines.  Bit
-    depth is meaningless for a lossy codec and an exact frame count
-    needs a full VBR frame walk, so both stay NULL — honest partial
-    metadata beats a fabricated number."""
-    none = (None, None, None, None)
-    try:
-        i = 0
-        if payload[:3] == b"ID3" and len(payload) >= 10:
-            i = 10 + ((payload[6] & 0x7F) << 21 | (payload[7] & 0x7F) << 14
-                      | (payload[8] & 0x7F) << 7 | (payload[9] & 0x7F))
-        end = min(len(payload) - 4, i + 4096)
-        while i <= end:
-            if payload[i] == 0xFF and (payload[i + 1] & 0xE0) == 0xE0:
-                ver = (payload[i + 1] >> 3) & 0x3
-                layer = (payload[i + 1] >> 1) & 0x3
-                br_idx = payload[i + 2] >> 4
-                sr_idx = (payload[i + 2] >> 2) & 0x3
-                mode = (payload[i + 3] >> 6) & 0x3
-                if ver == 1 or layer == 0 or sr_idx == 3 or br_idx == 15:
-                    i += 1  # reserved fields: a false sync
-                    continue
-                return (_MP3_RATES[ver][sr_idx],
-                        1 if mode == 3 else 2, None, None)
-            i += 1
-        return none
-    except IndexError:
-        return none
-
-
-def _audio_meta_real(payload: bytes):
-    """Audio-container dispatch for ``decode_audio_metadata('real')``:
-    WAV (PCM-gated), AIFF, FLAC and MP3 headers all parse stdlib-only;
-    anything else quarantines."""
-    if payload[:4] == b"RIFF":
-        return _wav_meta(payload)
-    if payload[:4] == b"FORM":
-        return _aiff_meta(payload)
-    if payload[:4] == b"fLaC":
-        return _flac_meta(payload)
-    if payload[:4] == b"OggS":
-        return _ogg_audio_meta(payload)
-    if payload[:3] == b"ID3" or (
-            len(payload) > 1 and payload[0] == 0xFF
-            and (payload[1] & 0xE0) == 0xE0):
-        return _mp3_meta(payload)
-    return None, None, None, None
-
-
-def _fake_audio_meta(payload: bytes):
-    h = hashlib.md5(payload).digest()
-    rate = (8000, 16000, 22050, 44100, 48000)[h[0] % 5]
-    ch = 1 + h[1] % 2
-    bits = (8, 16, 24)[h[2] % 3]
-    return rate, ch, bits, int.from_bytes(h[3:6], "big")
-
-
-def decode_audio_metadata(media: DataFrame,
-                          decoder: str = "real") -> DataFrame:
-    """Audio twin of :func:`decode_metadata`: payloads →
-    (sample_rate, channels, bits, n_frames, n_bytes), Arrow-batched
-    ``mapInPandas``, no shuffle, NULL-payload/undecodable rows
-    quarantined with NULL metadata.  ``decoder="real"`` performs real
-    header decode across the standard audio containers
-    (:func:`_audio_meta_real`): WAV (PCM/float-gated, including the
-    EXTENSIBLE SubFormat check), AIFF (80-bit extended-float sample
-    rate, reference-anchored against the JVM's javax.sound writer),
-    FLAC STREAMINFO bit fields, OGG identification packets (Vorbis and
-    Opus), and MP3 first-frame headers (bit depth and exact frame
-    count honestly NULL for the lossy codecs).
-    ``decoder="fake"`` md5-derives the fields so the synthetic
-    testdata (utf-8 payloads) exercises the plumbing."""
-
-    def _decode(batches):
-        import pandas as pd
-
-        meta_of = _audio_meta_real if decoder == "real" else _fake_audio_meta
-        for pdf in batches:
-            metas = [
-                meta_of(bytes(p)) if p is not None else (None,) * 4
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "sample_rate": [m[0] for m in metas],
-                    "channels": [m[1] for m in metas],
-                    "bits": [m[2] for m in metas],
-                    "n_frames": [m[3] for m in metas],
-                    "n_bytes": [
-                        len(p) if p is not None else None
-                        for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return media.mapInPandas(_decode, AUDIO_SCHEMA)
-
-
-VIDEO_SCHEMA = (
-    "media_id long, kind string, width int, height int, "
-    "duration_ms long, n_bytes long"
-)
-
-
-def _mp4_video_meta(payload: bytes):
-    """REAL MP4 / ISO-BMFF video-header decode, stdlib-only: walk the
-    size+type box tree (64-bit largesize and to-end-of-file sizes
-    included) for moov → mvhd (timescale + duration → milliseconds)
-    and moov → trak → tkhd (16.16 fixed-point presentation width and
-    height; the largest track wins — the video track, next to audio
-    tracks whose tkhd dims are zero).  (width, height, duration_ms) or
-    all-None for unknown magic / torn boxes — the dimensions live in
-    moov, so like every other header pass this never touches mdat."""
-    import struct
-
-    none = (None, None, None)
-
-    def boxes(lo: int, hi: int):
-        i = lo
-        while i + 8 <= hi:
-            (size,) = struct.unpack(">I", payload[i:i + 4])
-            tag = payload[i + 4:i + 8]
-            body = i + 8
-            if size == 1:  # 64-bit largesize
-                if i + 16 > hi:
-                    return
-                (size,) = struct.unpack(">Q", payload[i + 8:i + 16])
-                body = i + 16
-            elif size == 0:  # box extends to the end
-                size = hi - i
-            if size < 8 or i + size > hi:
-                return  # torn/corrupt box: stop the walk
-            yield tag, body, i + size
-            i += size
-
-    try:
-        if payload[4:8] not in (b"ftyp", b"styp", b"moov", b"free",
-                                b"wide", b"skip", b"mdat", b"pnot"):
-            return none
-        w = h = dur_ms = None
-        for tag, lo, hi in boxes(0, len(payload)):
-            if tag != b"moov":
-                continue
-            for t2, lo2, hi2 in boxes(lo, hi):
-                if t2 == b"mvhd":
-                    ver = payload[lo2]
-                    if ver == 1:
-                        if lo2 + 32 > hi2:
-                            return none  # undersized box: corrupt
-                        ts, dur = struct.unpack(
-                            ">IQ", payload[lo2 + 20:lo2 + 32])
-                        unknown = dur == 0xFFFFFFFFFFFFFFFF
-                    else:
-                        if lo2 + 20 > hi2:
-                            return none
-                        ts, dur = struct.unpack(
-                            ">II", payload[lo2 + 12:lo2 + 20])
-                        unknown = dur == 0xFFFFFFFF
-                    # all-ones duration is the spec's "unknown" sentinel
-                    # (fragmented/live files) — report NULL, don't
-                    # fabricate an ~82-day runtime
-                    if ts and not unknown:
-                        dur_ms = int(dur * 1000 // ts)
-                elif t2 == b"trak":
-                    for t3, lo3, hi3 in boxes(lo2, hi2):
-                        if t3 != b"tkhd":
-                            continue
-                        ver = payload[lo3]
-                        base = lo3 + (88 if ver == 1 else 76)
-                        if base + 8 > hi3:
-                            return none  # undersized box: corrupt
-                        tw, th = struct.unpack(
-                            ">II", payload[base:base + 8])
-                        tw, th = tw >> 16, th >> 16  # 16.16 fixed
-                        if tw and th and (w is None or tw * th > w * h):
-                            w, h = tw, th
-        if w is None and dur_ms is None:
-            return none
-        return w, h, dur_ms
-    except (struct.error, IndexError):
-        return none
-
-
-def _fake_video_meta(payload: bytes):
-    h = hashlib.md5(payload).digest()
-    width = 160 + 8 * (h[0] % 210)
-    height = 120 + 8 * (h[1] % 120)
-    return width, height, int.from_bytes(h[2:5], "big")
-
-
-def decode_video_metadata(media: DataFrame,
-                          decoder: str = "real") -> DataFrame:
-    """Video twin of :func:`decode_metadata`: payloads →
-    (width, height, duration_ms, n_bytes), Arrow-batched
-    ``mapInPandas``, no shuffle, NULL-payload/undecodable rows
-    quarantined with NULL metadata.  ``decoder="real"`` walks the MP4 /
-    ISO-BMFF box tree (:func:`_mp4_video_meta`) — headers only, the
-    mdat payload is never touched, which is what makes a 100 TB video
-    metadata pass I/O-bound rather than codec-bound.  ``decoder="fake"``
-    md5-derives the fields for the synthetic testdata."""
-
-    def _decode(batches):
-        import pandas as pd
-
-        meta_of = _mp4_video_meta if decoder == "real" else _fake_video_meta
-        for pdf in batches:
-            metas = [
-                meta_of(bytes(p)) if p is not None else (None,) * 3
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "width": [m[0] for m in metas],
-                    "height": [m[1] for m in metas],
-                    "duration_ms": [m[2] for m in metas],
-                    "n_bytes": [
-                        len(p) if p is not None else None
-                        for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return media.mapInPandas(_decode, VIDEO_SCHEMA)
 
 
 PIXELS_SCHEMA = (
@@ -1694,32 +1342,6 @@ def _wav_samples(payload: bytes):
     return None
 
 
-def inflate_entropy_coded(payload: bytes):  # pragma: no cover - gate
-    """The remaining codec gate, adjudicated PERMANENT in r16:
-    ARITHMETIC-coded JPEG scans (SOF9+) and lossless JPEG (SOF3+) —
-    formats mainstream encoders never emit (historically patent-bound;
-    javax.imageio can neither write NOR read them).  Wontfix rationale:
-    a from-spec QM-coder implementation (ITU-T T.81 Annex D/G/H) would
-    have no reference encoder or decoder in this environment to verify
-    against — an unverifiable codec is worse than an honest quarantine
-    — and real-world exposure is near-zero.  The contract is pinned by
-    test (test_arithmetic_jpeg_quarantine_contract_is_permanent):
-    :func:`decode_pixels` quarantines such rows (REAL header dims kept,
-    pixels NULL), never raises, and never fails the task.  Everything
-    real-world decodes dependency-free: PNG (zlib + unfilter + Adam7),
-    GIF (pure-Python LZW), BMP, WAV PCM, and JPEG in BOTH its Huffman
-    forms — sequential (SOF0/SOF1) and progressive (SOF2) — via
-    :func:`_jpeg_raster`, verified against the JVM's javax.imageio
-    codec.  Slot a codec-library call here if the arithmetic variant
-    ever matters."""
-    raise NotImplementedError(
-        "arithmetic-coded/lossless JPEG decode requires codec "
-        "libraries not present in this environment; PNG/GIF/BMP/WAV "
-        "and sequential/progressive Huffman JPEG payloads decode for "
-        "real via decode_pixels(decoder='real')"
-    )
-
-
 def _fake_raster(payload: bytes):
     """Deterministic pseudo-raster (md5-chained, 4x4 RGB) so the
     synthetic utf-8 testdata exercises the pixel plumbing."""
@@ -1779,10 +1401,9 @@ def decode_pixels(media: DataFrame, decoder: str = "real") -> DataFrame:
     (BI_RGB 8/24/32-bit), WAV PCM and JPEG — sequential AND
     progressive Huffman (canonical Huffman + numpy IDCT,
     javax.imageio-verified) — for REAL, dependency-free.  Only
-    arithmetic-coded/lossless JPEG remains codec-bound
-    (:func:`inflate_entropy_coded`): those rows keep real header dims
-    with NULL pixels.  JPEG frames past ~11 MP color (the
-    ``_MAX_RASTER_BYTES // 8`` sample budget — see
+    arithmetic-coded/lossless JPEG remains codec-bound: those rows
+    keep real header dims with NULL pixels.  JPEG frames past ~11 MP
+    color (the ``_MAX_RASTER_BYTES // 8`` sample budget — see
     :func:`_jpeg_raster`) quarantine the same way.  Torn/unknown/NULL
     payloads quarantine — one bad payload never fails the task.
 
@@ -1867,12 +1488,9 @@ def decode_metadata(media: DataFrame, decoder: str = "real") -> DataFrame:
 def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
     """Deterministic fake featurizer: payload bytes → dim-float vector
     (md5-chained).  Real models slot in at the marked line; the Spark
-    contract (schema, batching, no driver materialization) is final.
-    For a REAL model-free image embedding, use
-    ``imagesim.pixel_features`` over :func:`decode_pixels` output —
-    a contrast-normalized thumbnail + channel stats that feed the ANN
-    and semantic-dedup operators directly; this md5 path stays as the
-    synthetic-payload mode the registered media_features query pins."""
+    contract (schema, batching, no driver materialization) is final;
+    this md5 path is the synthetic-payload mode the registered
+    media_features query pins."""
 
     def _featurize(batches):
         import pandas as pd

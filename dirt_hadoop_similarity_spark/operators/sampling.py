@@ -69,16 +69,6 @@ def assign_split(df: DataFrame, key: str, splits: dict[str, float],
     return df.withColumn("split", expr)
 
 
-def deterministic_sample(df: DataFrame, rate: float, key: str,
-                         salt: str = "sample") -> DataFrame:
-    """Keep a stable ``rate`` fraction of rows by key hash — the
-    repartition-proof replacement for ``df.sample(rate)``."""
-    if not 0.0 <= rate <= 1.0:
-        raise ValueError(f"rate must be in [0,1], got {rate}")
-    bound = int(round(rate * GRANULARITY))
-    return df.filter(split_bucket(F.col(key), salt=salt) < bound)
-
-
 def mixture_resample(df: DataFrame, parts: dict[str, int], group_col: str,
                      key: str, max_repeat: int = 1,
                      salt: str = "mixture") -> DataFrame:
@@ -97,8 +87,8 @@ def mixture_resample(df: DataFrame, parts: dict[str, int], group_col: str,
     driver-side arithmetic, no collect.  All derivations are bigint
     ``div`` arithmetic, so Spark and a SQL oracle agree bit-for-bit
     (no float rate ever rounds differently).  Membership of the
-    fractional last epoch is the same (salt, key) hash bucket as
-    :func:`deterministic_sample`: repartition-proof, and raising a
+    fractional last epoch is the (salt, key) hash bucket of
+    :func:`split_bucket`: repartition-proof, and raising a
     group's weight only ever ADDS epochs for a given key.
 
     A listed group with NO rows in ``df`` cannot constrain the budget
@@ -214,8 +204,8 @@ def temperature_mixture(df: DataFrame, group_col: str, key: str,
     sqrt's — each correctly rounded, hence bit-identical in any engine —
     where a general pow() is NOT portable across libm implementations.
     Everything after the sqrt chain is bigint div arithmetic, and epoch
-    membership uses the same (salt, key) hash bucket as
-    :func:`deterministic_sample`, so the result is repartition-proof and
+    membership uses the (salt, key) hash bucket of
+    :func:`split_bucket`, so the result is repartition-proof and
     oracle-replayable bit for bit.
 
     Output: input columns + ``epoch`` (1-based; a row appears once per
@@ -316,7 +306,7 @@ def stratified_sample(df: DataFrame, rates: dict[str, float], group_col: str,
                       salt: str = "stratified") -> DataFrame:
     """Per-group Bernoulli rates — the source-rebalancing knob of a
     training-data mix (upsample books, downsample boilerplate-heavy web
-    crawl).  Same hash-bucket determinism as :func:`deterministic_sample`;
+    crawl).  Same hash-bucket determinism as :func:`split_bucket`;
     the group only selects the THRESHOLD, so a row's fate still depends
     only on (salt, key): tightening a group's rate yields a strict
     subset of its previous sample."""
@@ -501,7 +491,7 @@ def cell_balanced_sample(vectors: DataFrame, cap: int, bits: int | None = None,
       the registered oracle query pins this mode.
     * ``target_cell_rows``: occupancy-scaled with an explicit target.
     * ``centroids`` (cell long, cvec array<float> —
-      ``similarity.kmeans_centroids`` / ``seed_centroids``): balance
+      e.g. ``similarity.seed_centroids``): balance
       over TRAINED clusters; assignment routes through
       ``assign_cells_gemm`` (one streaming GEMM pass, still no payload
       shuffle).  Mutually exclusive with the grid knobs.

@@ -1,41 +1,22 @@
-"""Scale mechanics: skew salting and bucketed (shuffle-free) joins.
+"""Scale mechanics: skew handling, static sizing and skew-safe windows.
 
-These are the two knobs the engine reaches for when AQE alone isn't
-enough at the 100 TB tier:
-
-  * **Salted aggregation** — a hot key (the reference's `have`/`be in`
-    paths, a boilerplate shingle, a celebrity user) funnels its entire
-    mass through one reducer. Salting splits each key into ``salt``
-    sub-keys, aggregates partially per sub-key, then finishes with a
-    second (tiny) aggregation. Works for any algebraic aggregate.
-  * **Salted join** — same idea for joins: the big skewed side gets a
-    deterministic salt column; the small side is replicated ``salt``
-    times; the join key becomes (key, salt). Replication factor trades
-    memory for parallelism.
-  * **Bucketed tables** — pre-shuffle once at write time
-    (``bucketBy(n, key)``); every later equi-join/aggregate on that key
-    is exchange-free. The cluster-scale analogue of the reference's
-    assumption that margins fit in task RAM — except it scales.
+  * **Salted join** — a hot key (the reference's `have`/`be in` paths, a
+    boilerplate shingle, a celebrity user) funnels its entire mass
+    through one reducer.  The big skewed side gets a deterministic salt
+    column; the small side is replicated ``salt`` times; the join key
+    becomes (key, salt).  Replication factor trades memory for
+    parallelism.  :func:`key_skew_profile` is the diagnosis before it.
+  * **Static sizing** — :func:`static_partitions` picks a shuffle
+    partition count from a plan's size estimate for inputs too small to
+    repay AQE's per-stage jobs; :class:`loop_conf` applies it in scope.
+  * **Skew-safe windows** — exact ntiles, Z-order keys and sessionization
+    that never funnel a whole key space through one window partition.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-
-def salted_sum(df: DataFrame, keys: list[str], value: str, salt: int = 16,
-               alias: str | None = None) -> DataFrame:
-    """Two-phase skew-proof SUM: groupBy (keys + salt) partial, then
-    groupBy keys final.  Salt derives from a hash of the whole row's
-    monotonically-increasing position — uniform and deterministic within
-    a run, never driver-visible."""
-    out = alias or f"sum_{value}"
-    salted = df.withColumn(
-        "_salt", (F.monotonically_increasing_id() % salt).cast("int")
-    )
-    partial = salted.groupBy(*keys, "_salt").agg(F.sum(value).alias("_partial"))
-    return partial.groupBy(*keys).agg(F.sum("_partial").alias(out))
 
 
 def salted_join(large: DataFrame, small: DataFrame, key: str,
@@ -164,71 +145,6 @@ class loop_conf:
         return False
 
 
-def semi_prune(large: DataFrame, small: DataFrame, key: str) -> DataFrame:
-    """Pre-join pruning: drop large-side rows whose key cannot match the
-    small side BEFORE the expensive join/aggregation shuffles them.
-
-    A plain shuffle join moves every large-side row, matching or not;
-    when the small side hits a sliver of the key space (a test-set pair
-    list against a corpus-wide MI table, an id batch against the full
-    signature index), most of that shuffle is waste.  This helper makes
-    the reduction explicit as a broadcast left-semi: the small side's
-    distinct keys ride to every task and non-members die at the scan, so
-    downstream shuffle volume becomes |matches|, not |large|.  Exact
-    (semi, not approximate) — safe to reuse the pruned relation alone.
-
-    When the small side's keys outgrow the broadcast threshold, DON'T
-    use this — Spark's runtime Bloom-filter injection
-    (``spark.sql.optimizer.runtime.bloomFilter.enabled``, verified on by
-    default in this build) handles that tier automatically: it plants an
-    approximate bloom of the creation side under the scan of the
-    application side for shuffle joins, which is exactly this pattern
-    with bounded memory.
-    """
-    keys = small.select(F.col(key)).distinct()
-    return large.join(F.broadcast(keys), key, "left_semi")
-
-
-def write_bucketed(df: DataFrame, table: str, key: str, buckets: int = 32,
-                   sort_by: str | None = None) -> None:
-    """Persist as a bucketed (and optionally sorted) managed table —
-    subsequent joins/aggregations on ``key`` skip the exchange."""
-    w = df.write.mode("overwrite").bucketBy(buckets, key)
-    if sort_by:
-        w = w.sortBy(sort_by)
-    w.saveAsTable(table)
-
-
-def bucketed_join(spark: SparkSession, left_table: str, right_table: str,
-                  key: str, how: str = "inner") -> DataFrame:
-    """Join two same-bucketed tables; with matching bucket specs Catalyst
-    plans a SortMergeJoin with NO Exchange on either side."""
-    return spark.table(left_table).join(spark.table(right_table), key, how)
-
-
-def write_date_partitioned(df: DataFrame, path: str, ts_col: str = "ts",
-                           part_col: str = "event_date") -> None:
-    """Hive-style date-partitioned layout — the 100 TB event-log write
-    path.  A time-ranged query then prunes whole partition DIRECTORIES
-    at planning time from the file index (the scan's
-    ``PartitionFilters``), before any file is opened — a decade of logs
-    costs one day's IO for one day's query.  Complements
-    :func:`write_bucketed` (which pre-shuffles for exchange-free JOINS;
-    this prunes SCANS) and Z-ordering (which clusters WITHIN files for
-    row-group skipping on non-partition columns).
-
-    The partition column is derived, not consumed: the original
-    ``ts_col`` stays in the data files at full resolution.
-    test_scale pins the pruning in the executed plan and the round-trip
-    values."""
-    (
-        df.withColumn(part_col, F.to_date(F.col(ts_col)))
-        .write.mode("overwrite")
-        .partitionBy(part_col)
-        .parquet(path)
-    )
-
-
 def key_skew_profile(df: DataFrame, key: str, top: int = 10) -> DataFrame:
     """The diagnosis that precedes salting: the ``top`` hottest keys with
     their frequency, rank, and multiple-of-average-load.
@@ -238,7 +154,7 @@ def key_skew_profile(df: DataFrame, key: str, top: int = 10) -> DataFrame:
     ranking window — the unpartitioned window only ever sees ``top``
     rows, never the key space.  Read `x_avg` against the executor count:
     a key at 40x average on a 32-slot stage is a straggler; reach for
-    `salted_sum`/`salted_join` (or AQE skew-join for joins).
+    `salted_join` (or AQE skew-join for joins).
     """
     counts = df.groupBy(key).agg(F.count(F.lit(1)).alias("n"))
     avg = counts.agg(F.avg("n").alias("_avg_n"))

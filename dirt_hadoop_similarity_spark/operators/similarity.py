@@ -399,21 +399,14 @@ def random_hyperplanes(
     ]
 
 
-def hyperplane_bucket(vec: Column, planes: list[list[int]]) -> Column:
-    """SRP bucket id: bit j = sign(plane_j · quantize(vec)).
-
-    All-long arithmetic (quantized vector × int16 weights) — bit-exact in
-    any engine; the plane weights are plan-time literal arrays."""
-    return hyperplane_bucket_q(_quantize(vec), planes)
-
-
 def hyperplane_bucket_q(qvec: Column, planes: list[list[int]]) -> Column:
-    """:func:`hyperplane_bucket` over an ALREADY-quantized int array —
-    callers that project the quantized vector anyway (the prescore
-    pattern) pass the column reference so the O(dim) quantization HOF
-    runs once per row, not once per plane (HOFs sit outside codegen
-    subexpression elimination, so each embedded ``_quantize`` subtree
-    re-evaluates)."""
+    """SRP bucket id over an ALREADY-quantized int array: bit j =
+    sign(plane_j · qvec), all-long arithmetic, so bit-exact in any
+    engine.  Callers that project the quantized vector anyway (the
+    prescore pattern) pass the column reference so the O(dim)
+    quantization HOF runs once per row, not once per plane (HOFs sit
+    outside codegen subexpression elimination, so each embedded
+    ``_quantize`` subtree re-evaluates)."""
     terms = []
     for j, plane in enumerate(planes):
         pl = F.array(*[F.lit(w).cast("long") for w in plane])
@@ -475,32 +468,6 @@ def rh_bucket_topk(
     )
 
 
-def assign_cells(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF assignment: each vector → its max-cosine centroid (``cell``).
-
-    ``centroids``: (cell long, cvec array<float>) — always small (k ≤ a
-    few thousand) → broadcast; assignment is one corpus pass, no shuffle
-    until the per-vector argmax (window over |centroids| candidate rows).
-    """
-    scored = vectors.crossJoin(F.broadcast(centroids)).select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.col("cell"),
-        quantized_cosine(F.col(vec_col), F.col("cvec")).alias("ccos"),
-    )
-    w = W.partitionBy(id_col).orderBy(F.desc("ccos"), F.asc("cell"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(id_col, vec_col, "cell")
-    )
-
-
 def assign_cells_gemm(
     vectors: DataFrame,
     centroids: DataFrame,
@@ -508,8 +475,8 @@ def assign_cells_gemm(
     vec_col: str = "embedding",
     panel=None,
 ) -> DataFrame:
-    """IVF assignment via blocked GEMM — row-identical to
-    :func:`assign_cells`, different physical strategy: the (bounded,
+    """IVF assignment via blocked GEMM — each vector to its max-cosine
+    centroid (``cell``, ties to the lowest cell): the (bounded,
     SURVEY-S6) centroid panel is collected into the UDF closure and
     each Arrow batch of the corpus scores against it with ONE int64
     matmul, instead of a crossJoin expanding |corpus| × |centroids|
@@ -581,9 +548,9 @@ def _collect_centroids(centroids: DataFrame):
 
 def _assign_np(V, CB):
     """Column index of each row's max ROUNDED cosine against the
-    (cell-ascending) quantized centroid matrix — the exact semantics of
-    :func:`assign_cells`'s (desc ccos, asc cell) window: np.argmax takes
-    the FIRST max, and columns are sorted by cell ascending."""
+    (cell-ascending) quantized centroid matrix, ties to the lowest cell:
+    np.argmax takes the FIRST max, and columns are sorted by cell
+    ascending."""
     import numpy as np
 
     cbnorm = np.sqrt((CB * CB).sum(axis=1).astype(np.float64))
@@ -643,54 +610,12 @@ def seed_centroids(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Deterministic centroid seeds: the first ``n_centroids`` vectors by
-    id.  The testable stand-in for a trained codebook — swap in
-    :func:`kmeans_centroids` (or any external trainer) at scale; the
-    IVF search path is identical either way."""
+    id.  The testable stand-in for a trained codebook — swap in any
+    external trainer's (cell, cvec) table at scale; the IVF search path
+    is identical either way."""
     return embeddings.filter(F.col(id_col) < n_centroids).select(
         F.col(id_col).alias("cell"), F.col(vec_col).alias("cvec")
     )
-
-
-def kmeans_centroids(
-    embeddings: DataFrame,
-    k: int = 16,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Spherical k-means codebook trainer, pure DataFrame ops.
-
-    Per iteration: broadcast the k centroids, one corpus pass to assign
-    (max cosine), then a groupBy-mean over the cells — the classic
-    Lloyd's step as partial-aggregated shuffle whose volume is k × dim,
-    not corpus mass.  The driver-side loop holds only the iteration
-    counter; centroids never leave the cluster.  Deterministic: seeds
-    are the first k vectors by id, ties break on cell id."""
-    cent = seed_centroids(embeddings, k, id_col, vec_col)
-    for _ in range(iters):
-        assigned = assign_cells_gemm(embeddings, cent, id_col, vec_col)
-        # Lloyd's update via posexplode + (cell, component) avg: partial
-        # aggregation collapses each map partition to ≤ k×dim rows before
-        # the shuffle — collect_list-of-vectors per cell would buffer
-        # whole cells in one aggregation state (no map-side combine).
-        means = assigned.select(
-            "cell", F.posexplode(vec_col).alias("i", "x")
-        ).groupBy("cell", "i").agg(F.avg("x").alias("m"))
-        updated = means.groupBy("cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "m"))),
-                lambda s: s["m"].cast("float"),
-            ).alias("cvec")
-        )
-        # a cell that attracted no vectors this round vanishes from the
-        # groupBy; keep its previous centroid so k never shrinks (likely
-        # with near-identical seeds — the first k vectors by id)
-        cent = (
-            cent.select("cell", F.col("cvec").alias("prev"))
-            .join(updated, "cell", "left")
-            .select("cell", F.coalesce("cvec", "prev").alias("cvec"))
-        )
-    return cent
 
 
 def ivf_topk(
@@ -710,7 +635,7 @@ def ivf_topk(
     independently of the hash-family geometry.
 
     Defaults to :func:`seed_centroids` (deterministic, oracle-friendly);
-    pass ``centroids=kmeans_centroids(...)`` for a trained codebook.
+    pass ``centroids`` (cell, cvec) for a trained codebook.
     """
     cent, assigned = ivf_build(
         embeddings, n_centroids=n_centroids, centroids=centroids,
@@ -1283,8 +1208,8 @@ def semantic_dedup(
     mark the rest as semantic duplicates.
 
     Deterministic rendering: the "cluster" is the sign-LSH cell (the
-    same axis-plane family as :func:`lsh_bucket_topk`; swap in IVF cells
-    from :func:`kmeans_centroids` for trained clustering), and a vector
+    same axis-plane family as :func:`lsh_bucket_topk`; pass trained
+    ``centroids`` for IVF cells instead), and a vector
     is DROPPED iff a lower-id vector in its cell has cosine ≥
     ``threshold``.  Lowest id wins — the paper keeps an arbitrary member
     per ε-ball; pinning it to the id order makes reruns (and the oracle)
@@ -1319,7 +1244,7 @@ def semantic_dedup(
     * ``target_cell_rows``: occupancy-scaled grid with an explicit
       occupancy target (the default mode's knob spelled out).
     * ``centroids`` (cell long, cvec array<float>): trained clustering
-      (:func:`kmeans_centroids` / :func:`seed_centroids`) — cells are
+      (e.g. :func:`seed_centroids` or an external trainer) — cells are
       assigned by max-cosine GEMM (:func:`assign_cells_gemm`, one
       streaming corpus pass, no shuffle), matching the SemDeDup paper's
       k-means clustering.  Mutually exclusive with the grid knobs.
@@ -1425,8 +1350,8 @@ def pq_seed_codebooks(embeddings: DataFrame, m: int = 8, dsub: int = 8,
     """Deterministic per-subspace codebooks: centroid ``code`` of
     subspace ``sub`` is the sub-th slice of the code-th vector by id —
     (sub, code, cvec array<long>), m × ksub rows.  The oracle-friendly
-    stand-in for a trained codebook (swap in :func:`pq_train_codebooks`
-    at scale; the encode/search path is identical)."""
+    stand-in for a trained codebook (swap in a trained one at scale;
+    the encode/search path is identical)."""
     subs = subvector_split(F.col(vec_col), m, dsub)
     return (
         embeddings.filter(F.col(id_col) < ksub)
@@ -1517,11 +1442,10 @@ def _lloyd_subspaces(subs: DataFrame, cb: DataFrame, iters: int,
     m × ksub) codebook panel (:func:`_lloyd_assign_np` — map-only, no
     shuffle, exact int64, argmin ties to the lowest code) + a
     ((sub, code), component) average whose shuffle is m × ksub × dsub
-    rows after partial aggregation — corpus-size-independent, exactly
-    like :func:`kmeans_centroids`.  The per-iteration ``collect`` of
-    the codebook is the same bounded-panel barrier the build's fused
-    encode already takes; each iteration's update math stays in Spark
-    (distributed exact averages)."""
+    rows after partial aggregation — corpus-size-independent.  The
+    per-iteration ``collect`` of the codebook is the same bounded-panel
+    barrier the build's fused encode already takes; each iteration's
+    update math stays in Spark (distributed exact averages)."""
     spark = subs.sparkSession
     for _ in range(iters):
         cb_rows = cb.collect()  # m × ksub — bounded panel
@@ -1550,25 +1474,6 @@ def _lloyd_subspaces(subs: DataFrame, cb: DataFrame, iters: int,
                 "sub", "code", F.coalesce("cvec", "prev").alias("cvec")
             )
         )
-    return cb
-
-
-def pq_train_codebooks(embeddings: DataFrame, m: int = 8, dsub: int = 8,
-                       ksub: int = 16, iters: int = 5,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> DataFrame:
-    """Lloyd's per-subspace codebook training, all m subspaces in ONE
-    pass per iteration (see :func:`_lloyd_subspaces` for the loop's
-    shuffle shape — corpus-size-independent)."""
-    subs = embeddings.select(
-        F.col(id_col),
-        F.posexplode(
-            subvector_split(F.col(vec_col), m, dsub)
-        ).alias("sub", "svec"),
-    ).cache()
-    cb = pq_seed_codebooks(embeddings, m, dsub, ksub, id_col, vec_col)
-    cb = _lloyd_subspaces(subs, cb, iters, id_col)
-    subs.unpersist()
     return cb
 
 

@@ -68,13 +68,13 @@ def run_pipeline(
     spark: SparkSession,
     corpus: str | DataFrame,
     pairs_df: DataFrame | None = None,
-    cache: bool = True,
 ) -> DirtResult:
     """Run the full DIRT computation.
 
     ``corpus``: path to biarc text files, or a pre-parsed DataFrame of raw
     lines with a ``value`` column.  ``pairs_df``: (p1, p2[, label]) path
-    pairs to score; if None, stops after ΣMI.
+    pairs to score; if None, stops after ΣMI.  ``triples`` and ``mi`` come
+    back cached; the caller releases them.
     """
     if isinstance(corpus, str):
         biarcs = read_biarc_lines(spark, corpus)
@@ -82,9 +82,7 @@ def run_pipeline(
         biarcs = parse_biarc_lines(corpus)
     parsed = rebalance_for_extraction(with_tokens(biarcs), spark)
 
-    triples = counting.triples(facts(extractions(parsed)))
-    if cache:
-        triples = triples.cache()
+    triples = counting.triples(facts(extractions(parsed))).cache()
 
     sw = counting.word_margins(triples)
     ps = counting.path_margins(triples)
@@ -93,13 +91,10 @@ def run_pipeline(
     except BaseException:
         # the pipeline's one action: on failure the caller gets no
         # handle to release the cache it registered
-        if cache:
-            triples.unpersist()
+        triples.unpersist()
         raise
 
-    mi_df = mi_ops.mi_table(triples, sw, ps, n_total)
-    if cache:
-        mi_df = mi_df.cache()
+    mi_df = mi_ops.mi_table(triples, sw, ps, n_total).cache()
     sum_mi_df = mi_ops.sum_mi(mi_df)
 
     sims = None

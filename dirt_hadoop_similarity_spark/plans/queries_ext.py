@@ -490,8 +490,7 @@ def ann_rh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # IVF-flat: the cell-partition scale path next to hash bucketing.  The
 # oracle uses the deterministic seed codebook (vec_id < n_centroids) so
-# assignment/probing are reproducible in pure SQL; the trained-codebook
-# variant (kmeans_centroids) is pytest-verified instead.
+# assignment/probing are reproducible in pure SQL.
 _IVF_N_CENT, _IVF_NPROBE = 16, 2
 
 _ANN_IVF_SQL = f"""
@@ -664,8 +663,9 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _langid_case_expr(ltoks: str = "ltoks") -> str:
-    """The lang_id argmax as one DuckDB CASE expression over a token-list
-    column — shared by the text_langid and curation_funnel oracles."""
+    """The language-ID argmax (``textfns.lang_id_from_scores``) as one
+    DuckDB CASE expression over a token-list column — shared by the
+    text_langid and curation_funnel oracles."""
     score = {
         lang: f"len(list_filter({ltoks}, w -> list_contains([{', '.join(map(repr, markers))}], w)))"
         for lang, markers in textfns.LANG_MARKERS.items()
@@ -705,7 +705,7 @@ SELECT predicted_lang, CAST(count(*) AS BIGINT) AS n FROM (
 )
 def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bind the token array, then the per-language scores, then argmax
-    # over the bound columns: the convenience lang_id(text) embeds each
+    # over the bound columns: an unbound argmax over text embeds each
     # HOF score at ~2(L-1) comparison sites and re-tokenizes at every
     # one.  Measured 0.43x at sf0.1, bit-identical.
     docs = load(spark, sf_dir, "documents")
@@ -2536,7 +2536,7 @@ FROM pairs GROUP BY pair HAVING count(*) >= 100
     "merge).  Pure explode + groupBy with map-side partial aggregation "
     "— the shuffle is |distinct pairs| (bounded by alphabet^2), not "
     "corpus mass; the full trainer loops this with a merge table "
-    "broadcast back, same shape as kmeans_centroids' driver loop.",
+    "broadcast back.",
 )
 def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
@@ -3140,7 +3140,7 @@ SELECT query_id, neighbor_id, adc_d2, rank FROM (
     _ANN_IVFPQ_TRAINED_SQL,
     "IVF-PQ with a TRAINED residual codebook: 2 fixed Lloyd's "
     "iterations over the residual subvectors (the "
-    "similarity._lloyd_subspaces loop pq_train_codebooks shares), "
+    "similarity._lloyd_subspaces loop), "
     "unrolled one CTE block per round in the oracle — assignment is "
     "argmin exact-int d2 (ties to the lowest code), the update is "
     "round(exact-int-sum / count), emptied cells keep their previous "

@@ -915,11 +915,7 @@ def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cast epoch literal — whose unix_micros is exactly -offset
     # under any fixed-offset zone — recovers naive micros at every
     # admitted offset; Catalyst constant-folds the literal, so the
-    # plan cost is nil.  (The streaming twin, streaming/events.
-    # session_window_counts, keeps raw unix_micros: it has no
-    # cross-engine value oracle and its pytest contract compares
-    # stream vs batch through the same expression in one session,
-    # where the offset cancels.)
+    # plan cost is nil.
     from dirt_hadoop_similarity_spark.session import require_fixed_offset_tz
 
     require_fixed_offset_tz(spark)

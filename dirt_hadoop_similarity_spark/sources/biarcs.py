@@ -59,7 +59,8 @@ def read_biarc_lines(spark: SparkSession, path: str) -> DataFrame:
     return parse_biarc_lines(lines)
 
 
-def parse_biarc_lines(lines: DataFrame, col: str = "value") -> DataFrame:
+def parse_biarc_lines(lines: DataFrame) -> DataFrame:
+    """Raw text lines (a ``value`` column) → ``(head_word, ngram, n)``."""
     # F.get (not []): null-safe on short arrays.  Under ANSI mode p[i]
     # throws on out-of-bounds, and optimizer rules (e.g. local-relation
     # folding) may evaluate the projection before the size() guard filter.
@@ -67,7 +68,7 @@ def parse_biarc_lines(lines: DataFrame, col: str = "value") -> DataFrame:
     # trailing empty fields, so 'head\tngram\t' has length 2 there and is
     # rejected — F.split keeps trailing empties, which would wrongly
     # accept the line with a defaulted count (DirtDriver.java:487-492).
-    parts = F.split(F.regexp_replace(F.col(col), "\t+$", ""), "\t")
+    parts = F.split(F.regexp_replace(F.col("value"), "\t+$", ""), "\t")
     return (
         lines.select(parts.alias("p"))
         .filter(F.size("p") >= 3)

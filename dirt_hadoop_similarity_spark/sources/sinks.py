@@ -1,134 +1,27 @@
-"""Sinks: Parquet checkpoints (internal) and TSV export (human-readable,
-the reference's inter-job format — S3 §2.1).
+"""Sinks: TSV export (human-readable, the reference's inter-job format —
+S3 §2.1) and the sharded parquet layout.
 
 The reference materializes every stage as `key \\t value` text on S3
-(DirtDriver.java:1009-1014).  Internally we keep Parquet (columnar,
-predicate pushdown, 10×+ smaller); TSV remains as an export format for
-downstream consumers of the reference's files.
+(DirtDriver.java:1009-1014); the DIRT job writes its outputs the same
+way for downstream consumers of the reference's files.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 
-def write_tsv(df: DataFrame, path: str, mode: str = "overwrite",
+def write_tsv(df: DataFrame, path: str,
               coalesce: int | None = None) -> None:
     """Tab-separated text export, reference-compatible (no header,
-    no quoting — path strings contain no tabs by construction)."""
+    no quoting — path strings contain no tabs by construction);
+    replaces ``path``."""
     out = df.coalesce(coalesce) if coalesce else df
     (
-        out.write.mode(mode)
+        out.write.mode("overwrite")
         .option("sep", "\t")
         .option("emptyValue", "")
         .csv(path)
-    )
-
-
-def read_tsv(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    return spark.read.csv(path, sep="\t", schema=schema)
-
-
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite",
-                compression: str | None = "gzip",
-                partition_by: list[str] | None = None) -> None:
-    """JSON-lines export — the de-facto interchange format for training
-    corpora.  One JSON object per line; gzip by default (splittable
-    formats like zstd-parquet stay the INTERNAL format — JSONL is for
-    interop with tokenizer/trainer tooling that expects it)."""
-    w = df.write.mode(mode)
-    if compression:
-        w = w.option("compression", compression)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.json(path)
-
-
-def read_jsonl(spark: SparkSession, path: str,
-               schema: str | None = None,
-               corrupt_col: str | None = "_corrupt_record") -> DataFrame:
-    """JSONL scan.  ALWAYS pass a schema in production: schema inference
-    is a full extra pass over the data (at 100 TB, a second 100 TB read)
-    and silently unions ragged attributes.
-
-    Unparseable lines are QUARANTINED, not dropped and not nulled: when
-    a schema is passed, the ``corrupt_col`` column is appended to it
-    automatically (opt out with ``corrupt_col=None``), because Spark's
-    PERMISSIVE mode only populates the corrupt-record column if it
-    appears in the schema — without it every malformed line becomes an
-    all-NULL row that silently enters the corpus.  Filter
-    ``corrupt_col IS NULL`` for the clean rows; route the rest to a
-    quarantine sink.  One Spark restriction to know: a query whose
-    referenced columns are ONLY the corrupt column is disallowed on a
-    raw JSON scan (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN),
-    and column pruning makes ``filter(corrupt).count()`` exactly that —
-    materialize the filtered rows (collect/write) or cache() first.
-
-    Note the deliberate schema widening: with a schema and the default
-    ``corrupt_col``, the returned relation has one MORE column than the
-    declared DDL — round-tripping through :func:`write_jsonl` persists
-    it unless the caller drops it (filter clean + drop, or pass
-    ``corrupt_col=None`` to opt out).
-
-    On a SCHEMALESS (inference) read the quarantine contract still
-    holds: inference itself surfaces malformed lines by adding the
-    corrupt-record column to the inferred schema, and the option below
-    points Spark at the caller's ``corrupt_col`` name so a non-default
-    name is honored on both paths (ADVICE r13 — previously the option
-    was only set inside the schema branch, so a custom name on an
-    inferred read was a silent no-op).  The one inference-path caveat:
-    if NO line is malformed, the inferred schema simply lacks the
-    column — with an explicit schema it is always present."""
-    r = spark.read
-    if corrupt_col:
-        r = r.option("columnNameOfCorruptRecord", corrupt_col)
-    if schema is not None:
-        # exact field-name membership, not substring containment: a
-        # schema with a column like raw_corrupt_record_txt must not
-        # silently disable quarantine (ADVICE r12)
-        from pyspark.sql.types import StructType
-
-        fields = StructType.fromDDL(schema).fieldNames()
-        if corrupt_col and corrupt_col not in fields:
-            schema = f"{schema}, {corrupt_col} string"
-        r = r.schema(schema)
-    return r.json(path)
-
-
-def checkpoint_parquet(df: DataFrame, path: str,
-                       partition_by: list[str] | None = None) -> DataFrame:
-    """Materialize an intermediate to Parquet and return the re-read
-    DataFrame — the restartable analogue of the reference's per-job S3
-    writes, and a plan-breaker when a DAG grows too deep."""
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-    return df.sparkSession.read.parquet(path)
-
-
-def idempotent_batch_append(df: DataFrame, path: str, batch_id: int) -> None:
-    """The exactly-once parquet append for ``foreachBatch`` sinks:
-    batch-id-keyed DYNAMIC partition overwrite.
-
-    ``foreachBatch`` is at-least-once — a restart between the sink
-    write and the checkpoint commit re-delivers the batch, and a plain
-    ``mode("append")`` then duplicates every row of it.  Writing each
-    batch into its own ``batch_id=N`` partition with dynamic overwrite
-    makes re-delivery replace the failed attempt's partition instead of
-    appending beside it — idempotent as long as the batch's CONTENT is
-    deterministic (true for all of this engine's foreachBatch runners:
-    their per-row decisions depend only on (fixed model/index, row)).
-    Readers ``spark.read.parquet(path)`` as usual; the ``batch_id``
-    column rides along as partition metadata.
-    """
-    (
-        df.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
     )
 
 
@@ -149,37 +42,3 @@ def write_shards(df: DataFrame, path: str, key: str, num_shards: int,
         .partitionBy("shard")
         .parquet(path)
     )
-
-
-def compact_parquet(spark: SparkSession, in_path: str, out_path: str,
-                    target_rows_per_file: int,
-                    partition_by: list[str] | None = None) -> int:
-    """Rewrite a parquet directory into ~``target_rows_per_file``-sized
-    files — the small-file compaction every long-running ingest needs
-    (thousands of tiny files turn the next scan's task scheduling and
-    footer reads into the bottleneck long before byte throughput).
-
-    The row count comes from parquet metadata (footer statistics — no
-    data scan); the rewrite repartitions to ceil(n/target) output tasks
-    and additionally caps ``maxRecordsPerFile`` so a skewed partition
-    can never emit an oversized file.  With ``partition_by`` the
-    repartition is keyed on the partition columns, so each hive
-    partition's rows land in few tasks instead of every task writing a
-    sliver into every partition directory (the files-per-partition
-    explosion).  Returns the partition count used.
-    """
-    df = spark.read.parquet(in_path)
-    n = df.count()  # parquet count() is metadata-only: no column reads
-    parts = max(1, -(-n // max(target_rows_per_file, 1)))
-    if partition_by:
-        out = df.repartition(parts, *partition_by)
-    else:
-        out = df.repartition(parts)
-    w = (
-        out.write.mode("overwrite")
-        .option("maxRecordsPerFile", target_rows_per_file)
-    )
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(out_path)
-    return parts

@@ -3,8 +3,9 @@
 The reference is pure batch (SURVEY.md §2.8) — this module is the
 extension surface a continuously-ingesting corpus needs.  Every
 transformation is written against a generic DataFrame so the SAME
-function serves the batch table and the streaming source; the streaming
-wrapper adds watermark/trigger/sink plumbing.
+function serves the batch table and the streaming source
+(:func:`stream_events`); watermarks bound state only when the input is a
+stream.
 
 Local smoke testing uses the parquet file source + an in-memory sink and
 ``processAllAvailable()`` — the documented pattern for driving a
@@ -83,161 +84,6 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_windowed_counts_smoke(
-    spark: SparkSession, sf_dir: str, query_name: str = "windowed_counts_smoke"
-) -> DataFrame:
-    """Drive the windowed aggregation through a real streaming query into
-    a memory sink; returns the materialized result table."""
-    agg = windowed_counts(stream_events(spark, sf_dir))
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
-
-
-def run_stream_to_parquet(df: DataFrame, path: str, checkpoint: str,
-                          query_name: str = "stream_to_parquet") -> None:
-    """Exactly-once file sink: append-mode parquet with a checkpoint.
-
-    The checkpoint's offset log + the sink's file-commit log make the
-    pair idempotent across restarts: a re-run with the same checkpoint
-    resumes AFTER the last committed batch, so already-written rows are
-    never duplicated (the property at-least-once sources need;
-    test_streaming proves a second run appends zero rows).
-
-    ``availableNow`` trigger: process everything available, then stop —
-    the batch-like run mode for backfills and tests; swap for
-    ``processingTime`` in a continuous deployment.  Output files commit
-    atomically per batch via the sink's _spark_metadata log.
-    """
-    q = (
-        df.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .queryName(query_name)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def run_anomaly_score_stream(
-    spark,
-    events_stream: DataFrame,
-    stats_path: str,
-    out_path: str,
-    checkpoint: str,
-    z_threshold: float = 2.5,
-    query_name: str = "anomaly_score",
-) -> None:
-    """Per-user z-score anomaly detection AT INGEST: every micro-batch
-    is scored against the PERSISTED per-user moment statistics
-    (``operators/anomaly.value_stats`` written as parquet at
-    ``stats_path``) and flagged rows land in ``out_path`` — the same
-    train-offline / score-at-ingest split as ``run_lm_score_stream``.
-
-    ``foreachBatch`` because scoring joins against a side table, which
-    is a bounded batch plan per micro-batch (the stats side broadcasts:
-    |users| rows).  The stats stay FIXED for the run and a row's score
-    depends only on (stats, row), so every micro-batch's verdict is
-    independent: stream output == ``anomaly.score`` on the same events
-    regardless of batch splits (asserted in test_streaming), and
-    at-least-once re-delivery is harmless for the same reason as the
-    dedup and LM streams.  Stats refresh is a nightly batch rewrite of
-    ``stats_path`` — model read-modify-write stays OUT of the hot
-    ingest path.
-    """
-    from dirt_hadoop_similarity_spark.operators import anomaly
-    from dirt_hadoop_similarity_spark.sources.sinks import (
-        idempotent_batch_append,
-    )
-
-    stats = spark.read.parquet(stats_path).cache()
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        idempotent_batch_append(
-            anomaly.score(batch_df, stats, z_threshold=z_threshold),
-            out_path, batch_id,
-        )
-
-    q = (
-        events_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        # the stats cache is per-RUN; release it when the run ends so
-        # back-to-back runs don't stack stats copies in storage
-        stats.unpersist()
-
-
-def session_window_counts(events: DataFrame, gap: str = "30 minutes",
-                          watermark: str = "30 minutes") -> DataFrame:
-    """Native session-window aggregation: one row per (user, session)
-    with start, end (= last event + gap) and the event count — the
-    built-in streaming session operator beside the custom
-    ``sessionize_stateful`` counter.
-
-    Works on batch and streaming inputs (same function, same plan
-    shape — the engine-wide twin discipline).  Streaming mode is
-    APPEND-only (Spark rejects update for session windows): a session
-    emits exactly once, when the watermark passes its end, and its
-    state row is evicted at the same moment — so state is bounded by
-    ACTIVE sessions inside the watermark horizon, the tightest state
-    law of the engine's stateful streaming operators
-    (``sessionize_stateful`` keeps one row per user FOREVER by design —
-    :func:`sessionize_stateful_ttl` is its bounded-state twin, evicting
-    users idle past an event-time ttl; this one forgets a session as
-    soon as it can no longer grow).
-    test_streaming pins both sides on the replayed corpus: emitted
-    rows == the batch relation's closed sessions, and the final state
-    row count == the open-session count at the final watermark.
-    Emission caveat (why the value-oracle registry entry is the batch
-    ``session_windows`` query): sessions still open at replay end are
-    withheld in append mode, so a full-corpus value hash would always
-    miss the tail.
-
-    Skew exposure (measured, PERF.md round 12): state is
-    hash-partitioned by the grouping key, so one hot user's session
-    merge runs single-threaded per micro-batch — 4.06x hot-vs-uniform
-    wall at 5M events / 80% one user
-    (tools/sessionize_stress.py --streaming).  The batch
-    ``session_spans_auto`` gap-bucket rescue does NOT transfer: no
-    pre-collapse preserves append-mode emission under a watermark.
-    For count-style outputs route hot-key streams to
-    ``sessionize_stateful`` (one fixed-width state row per user); for
-    span-style outputs the straggle is bounded per micro-batch and
-    does not grow state (hot state rows = open sessions).
-    """
-    ev = normalize_event_ts(events)
-    if ev.isStreaming:
-        ev = ev.withWatermark("ts", watermark)
-    return (
-        ev.groupBy(
-            "user_id", F.session_window("ts", gap).alias("w")
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_micros("w.start").alias("session_start_us"),
-            F.unix_micros("w.end").alias("session_end_us"),
-            "n_events",
-        )
-    )
-
-
 def purchases_before_errors(events: DataFrame,
                             window_seconds: int = 1800) -> DataFrame:
     """Stream-stream interval join: for each error event, the purchases
@@ -264,51 +110,6 @@ def purchases_before_errors(events: DataFrame,
             F.col("purchase_ts")
             >= F.col("error_ts") - F.expr(f"INTERVAL {window_seconds} SECOND")
         ),
-    ).select("user_id", "error_id", "error_ts", "purchase_ts")
-
-
-def purchases_before_errors_outer(events: DataFrame,
-                                  window_seconds: int = 1800,
-                                  watermark: str = "1 hour") -> DataFrame:
-    """LEFT OUTER stream-stream interval join: every error event, with
-    its preceding-window purchases when they exist and ONE NULL-padded
-    row when none do — the attribution shape that keeps the unmatched
-    (an inner interval join silently drops every error that had no
-    purchase, which is usually the population being measured).
-
-    Streaming semantics (the part worth stating): matched rows emit as
-    they join; an UNMATCHED error emits its NULL-padded row only once
-    the watermark passes ``error_ts`` — before that, a matching
-    purchase could still arrive, so emitting earlier would be wrong,
-    and Spark withholds exactly that long.  State on both sides is
-    bounded by the watermark + the interval condition (the same
-    two-sided horizon as the inner join; errors held until the
-    watermark proves them matched-or-not).  Batch inputs run the same
-    expression as a plain left range join — the twin discipline, so
-    the batch side is the oracle for the stream (pinned in
-    test_streaming along with the withheld-tail law: errors inside the
-    final watermark horizon are NOT yet emitted as unmatched).
-    """
-    ev = normalize_event_ts(events)
-    errors = ev.filter(F.col("event_type") == "error").select(
-        "user_id", F.col("ts").alias("error_ts"),
-        F.col("event_id").alias("error_id"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"), F.col("ts").alias("purchase_ts")
-    )
-    if events.isStreaming:
-        errors = errors.withWatermark("error_ts", watermark)
-        purchases = purchases.withWatermark("purchase_ts", watermark)
-    return errors.join(
-        purchases,
-        (F.col("p_user") == F.col("user_id"))
-        & (F.col("purchase_ts") < F.col("error_ts"))
-        & (
-            F.col("purchase_ts")
-            >= F.col("error_ts") - F.expr(f"INTERVAL {window_seconds} SECOND")
-        ),
-        "left_outer",
     ).select("user_id", "error_id", "error_ts", "purchase_ts")
 
 
@@ -387,119 +188,4 @@ def sessionize_stateful(
         stateStructType="last_ts long, n_sessions long, n_events long",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def sessionize_stateful_ttl(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    ttl_seconds: int = 7200,
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """:func:`sessionize_stateful` with BOUNDED state: a user idle for
-    ``ttl_seconds`` of EVENT TIME (past the watermark) emits a final
-    summary row and their state row is EVICTED.
-
-    The no-TTL twin's state law is "one fixed-width row per user
-    FOREVER" — fine when |users| is the bounded dimension, but a
-    100 TB stream whose key space grows without bound (anonymous
-    sessions, device ids, crawl hosts) needs the state dimension to be
-    ACTIVE keys, not ever-seen keys.  EventTimeTimeout is the standard
-    rendering: each update re-arms the user's timeout at
-    ``last event + ttl``; when the watermark passes it, Spark invokes
-    the function once more with ``state.hasTimedOut`` and no rows, and
-    the final counts flush downstream as the row with
-    ``evicted = true``.
-
-    The trade, stated plainly: eviction forgets the user, so a key that
-    reappears AFTER its eviction restarts counting from zero (its next
-    event is session 1 event 1, and the gap rule cannot look across the
-    eviction) — downstream consumers merge per-user rows, summing
-    n_events and n_sessions (the eviction fired only after ttl ≥ gap of
-    idle event time, so the pre- and post-eviction sessions are
-    genuinely distinct sessions whenever ttl ≥ gap; enforced below).
-    In-horizon semantics are UNCHANGED: while a user stays live their
-    running counts equal the no-TTL twin's (pinned in test_streaming).
-
-    State law (the reason this variant exists): state rows == users
-    ACTIVE within the ttl horizon at the current watermark — bounded by
-    traffic concurrency, not key-space history.  The no-TTL twin's rows
-    == all users ever seen.  Both laws are asserted on the same replay
-    in test_streaming.
-
-    Output: (user_id, n_sessions, n_events, evicted).  Batch inputs
-    (no state store) take the batch sessionize operators instead —
-    this one is streaming-only because timeouts need a watermark.
-    """
-    if ttl_seconds < gap_seconds:
-        raise ValueError(
-            f"ttl_seconds ({ttl_seconds}) must be >= gap_seconds "
-            f"({gap_seconds}): evicting inside the session gap would "
-            "split what the gap rule defines as ONE session"
-        )
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    ev = (
-        normalize_event_ts(events)
-        .select("user_id", "ts", "event_id")
-        .filter(F.col("ts").isNotNull())
-        .withWatermark("ts", watermark)
-    )
-
-    def update(key, pdfs, state):
-        import pandas as pd
-
-        (user_id,) = key
-        if state.hasTimedOut:
-            last_ts, n_sessions, n_events = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_sessions": [n_sessions],
-                    "n_events": [n_events],
-                    "evicted": [True],
-                }
-            )
-            return
-        last_ts, n_sessions, n_events = (
-            state.get if state.exists else (None, 0, 0)
-        )
-        stamps = []
-        for pdf in pdfs:
-            stamps.extend(
-                int(t.value // 1000) for t in pd.to_datetime(pdf["ts"])
-            )
-        stamps.sort()
-        for us in stamps:
-            if last_ts is None or us - last_ts > gap_seconds * 1_000_000:
-                n_sessions += 1
-            last_ts = us
-            n_events += 1
-        state.update((last_ts, n_sessions, n_events))
-        # re-arm: evict at last event + ttl.  Event-time timeouts must
-        # be set STRICTLY past the current watermark — late data can
-        # leave last_ts + ttl already behind it, in which case the
-        # earliest legal eviction point is the next watermark tick.
-        timeout_ms = last_ts // 1000 + ttl_seconds * 1000
-        state.setTimeoutTimestamp(
-            max(timeout_ms, state.getCurrentWatermarkMs() + 1)
-        )
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_sessions": [n_sessions],
-                "n_events": [n_events],
-                "evicted": [False],
-            }
-        )
-
-    return ev.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "user_id long, n_sessions long, n_events long, evicted boolean"
-        ),
-        stateStructType="last_ts long, n_sessions long, n_events long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )

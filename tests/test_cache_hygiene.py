@@ -104,74 +104,3 @@ def test_release_all_drains_every_module(spark, sf_dir):
     assert _tracked_cache.release_all() == 5  # 2 curation + 1 dedup + 2 dsir
     assert cm.isEmpty()
     assert _tracked_cache.release_all() == 0  # idempotent
-
-
-def test_lm_stream_releases_caches_per_batch(spark, sf_dir, tmp_path):
-    """The score-at-ingest LM stream must not leak cached relations per
-    micro-batch: score_documents caches two relations per call and the
-    runner calls it once per batch — after a 2-batch run the session's
-    cache manager must be EMPTY (per-batch releases + the model cache
-    unpersisted when the run ends)."""
-    from dirt_hadoop_similarity_spark.operators import lm
-    from dirt_hadoop_similarity_spark.streaming import corpus as sco
-
-    _drain(spark)
-    cm = _cache_manager(spark)
-    assert cm.isEmpty()
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    uni, bi = lm.train_bigram_lm(docs.filter(F.col("lang") == "en"))
-    uni_path, bi_path = str(tmp_path / "uni"), str(tmp_path / "bi")
-    uni.write.parquet(uni_path)
-    bi.write.parquet(bi_path)
-
-    incoming = docs.filter(F.col("doc_id") >= 400)
-    landing = tmp_path / "landing"
-    incoming.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
-        str(landing / "f0"))
-    incoming.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(
-        str(landing / "f1"))
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(sco.DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .load(str(landing))
-    )
-    sco.run_lm_score_stream(
-        spark, stream, uni_path, bi_path, str(tmp_path / "scored"),
-        str(tmp_path / "ckpt"), query_name="lm_cache_hygiene_test",
-    )
-    assert spark.read.parquet(str(tmp_path / "scored")).count() \
-        == incoming.count()
-    assert cm.isEmpty()  # nothing cached survived the run
-    assert lm.release_caches() == 0  # the runner already drained them
-
-
-def test_anomaly_stream_releases_stats_cache(spark, tmp_path):
-    from dirt_hadoop_similarity_spark.operators import anomaly
-    from dirt_hadoop_similarity_spark.streaming import events as sev
-
-    _drain(spark)
-    cm = _cache_manager(spark)
-    history = spark.createDataFrame(
-        [(i, i % 5, 10.0 + (i % 3) + (50.0 if i % 17 == 0 else 0.0))
-         for i in range(100)],
-        ["event_id", "user_id", "value"],
-    )
-    stats_path = str(tmp_path / "stats")
-    anomaly.value_stats(history).write.parquet(stats_path)
-    landing = tmp_path / "landing"
-    history.coalesce(1).write.parquet(str(landing / "f0"))
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("event_id long, user_id long, value double")
-        .option("recursiveFileLookup", "true")
-        .load(str(landing))
-    )
-    sev.run_anomaly_score_stream(
-        spark, stream, stats_path, str(tmp_path / "flagged"),
-        str(tmp_path / "ckpt"), z_threshold=2.0,
-        query_name="anomaly_cache_hygiene_test",
-    )
-    assert cm.isEmpty()  # the per-run stats cache was released

@@ -326,3 +326,30 @@ def test_cli_runs_a_fixed_number_of_spark_jobs(spark, tmp_path):
         _run_with_testset(tmp_path, "jobs")
         jobs = [j for j in tracker.getJobIdsForGroup(None) if j > before]
     assert len(jobs) == 11, jobs
+
+
+def _assert_one_line_error(capsys, rc, path, out):
+    assert rc == 2
+    err = capsys.readouterr().err.strip().splitlines()
+    assert len(err) == 1 and str(path) in err[0], err
+    assert not out.exists()
+
+
+def test_cli_missing_corpus_is_one_line_error(spark, tmp_path, capsys):
+    missing = tmp_path / "no_such_corpus.txt"
+    out = tmp_path / "out_missing_corpus"
+    rc = cli_main([str(missing), "--out", str(out)])
+    _assert_one_line_error(capsys, rc, missing, out)
+
+
+def test_cli_missing_testset_is_one_line_error(spark, tmp_path, capsys):
+    corpus = tmp_path / "corpus_mt.txt"
+    corpus.write_text("\n".join(CORPUS) + "\n")
+    pos = tmp_path / "p_mt.txt"
+    pos.write_text("X chase Y\tX pursue Y\n")
+    missing = tmp_path / "no_such_negatives.txt"
+    out = tmp_path / "out_missing_testset"
+    rc = cli_main(
+        [str(corpus), "--testset", str(pos), str(missing), "--out", str(out)]
+    )
+    _assert_one_line_error(capsys, rc, missing, out)

@@ -35,21 +35,6 @@ def test_edge_direction_irrelevant(spark):
     assert rows == {1: 1, 2: 1, 5: 1}
 
 
-def test_duplicate_clusters_rollup(spark):
-    clusters = {
-        r["component"]: r
-        for r in components.duplicate_clusters(
-            _edges(spark, [(1, 2), (2, 3), (7, 8)])
-        ).collect()
-    }
-    assert set(clusters) == {1, 7}
-    assert clusters[1]["n_members"] == 3
-    assert clusters[1]["keeper_id"] == 1
-    assert clusters[1]["member_ids"] == [1, 2, 3]
-    assert clusters[7]["n_members"] == 2
-    assert clusters[7]["member_ids"] == [7, 8]
-
-
 def test_empty_edges(spark):
     assert components.connected_components(_edges(spark, [])).count() == 0
 

@@ -102,7 +102,7 @@ def test_budget_cut_unpartitioned_window_stays_on_bucket_relation(spark):
         [(i, f"doc text number {i} with several words") for i in range(50)],
         "doc_id long, text string",
     ).withColumn("n_tokens", F.size(F.split("text", " ")))
-    gated = curation.quality_gate(docs, min_quality=0.0)
+    gated = docs.withColumn("quality", F.length("text") / 100.0)
     out = curation.budget_selection(gated)
     lines = out._jdf.queryExecution().optimizedPlan().toString().splitlines()
 

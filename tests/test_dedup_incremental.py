@@ -52,33 +52,3 @@ def test_corpus_side_not_shuffled(docs):
 def test_signature_index_schema(docs):
     sigs = dedup.signature_index(docs, num_hashes=8)
     assert sigs.columns == ["doc_id"] + [f"h{k}" for k in range(8)]
-
-
-def test_compact_signature_index_roundtrip(spark, sf_dir, tmp_path):
-    """Compaction merges only NEW ids (existing rows win), the snapshot
-    is a valid probe target, and re-running is idempotent."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    corpus = docs.filter(F.col("doc_id") < 300)
-    day1 = docs.filter(F.col("doc_id").between(300, 399))
-
-    idx0 = str(tmp_path / "idx0")
-    dedup.signature_index(corpus).write.parquet(idx0)
-
-    idx1 = str(tmp_path / "idx1")
-    dedup.compact_signature_index(spark, day1, idx0, idx1)
-    merged = spark.read.parquet(idx1)
-    assert merged.count() == corpus.count() + day1.count()
-    # existing ids keep exactly one row even if re-offered
-    idx2 = str(tmp_path / "idx2")
-    dedup.compact_signature_index(
-        spark, corpus.unionByName(day1), idx1, idx2
-    )
-    assert spark.read.parquet(idx2).count() == merged.count()
-
-    # the new snapshot catches a doc duplicating a day-1 doc
-    probe = day1.limit(1)
-    dups = dedup.incremental_near_duplicates(
-        spark.read.parquet(idx1),
-        probe.select((F.col("doc_id") + 100000).alias("doc_id"), "text"),
-    ).filter(F.col("est_jaccard") >= 0.99)
-    assert dups.count() >= 1

@@ -223,21 +223,11 @@ def test_real_decode_edge_dims():
     assert _real_dims(b"\xff\xd8\xff\xd9") == (None, None, None)
 
 
-def test_entropy_decode_is_the_documented_gate():
-    """The NotImplementedError gate narrowed four times in r15: pixel
-    decode is REAL for PNG/GIF/BMP/WAV and both Huffman JPEG forms;
-    only arithmetic-coded/lossless JPEG remains codec-bound."""
-    import pytest
-
-    with pytest.raises(NotImplementedError, match="arithmetic-coded"):
-        multimodal.inflate_entropy_coded(b"\xff\xd8")
-
-
-def test_real_wav_header_decode_matches_stdlib_encoder(spark):
-    """decode_audio_metadata(decoder='real') against REAL WAV bytes the
-    stdlib wave module encoded — not hand-built headers — plus an
-    extra-chunk file (odd-sized LIST before fmt, exercising the RIFF
-    even-padding walk), unknown magic, and NULL payload."""
+def test_real_wav_header_decode_matches_stdlib_encoder():
+    """The WAV header parser behind decode_pixels' audio rows against
+    REAL WAV bytes the stdlib wave module encoded — not hand-built
+    headers — plus an extra-chunk file (odd-sized LIST before fmt,
+    exercising the RIFF even-padding walk) and unknown magic."""
     import io
     import struct
     import wave
@@ -259,37 +249,11 @@ def test_real_wav_header_decode_matches_stdlib_encoder(spark):
     extra = plain[:4] + struct.pack(
         "<I", 4 + len(oddlist) + len(body)) + b"WAVE" + oddlist + body
 
-    rows = [
-        (1, "audio", bytearray(plain)),
-        (2, "audio", bytearray(mono8)),
-        (3, "audio", bytearray(extra)),
-        (4, "audio", bytearray(b"ID3\x03not really mp3")),
-        (5, "audio", None),
-    ]
-    media = spark.createDataFrame(
-        rows, "media_id long, kind string, payload binary"
-    )
-    out = {r["media_id"]: r for r in
-           multimodal.decode_audio_metadata(media, decoder="real").collect()}
-    assert (out[1]["sample_rate"], out[1]["channels"], out[1]["bits"],
-            out[1]["n_frames"]) == (44100, 2, 16, 1000)
-    assert (out[2]["sample_rate"], out[2]["channels"], out[2]["bits"],
-            out[2]["n_frames"]) == (8000, 1, 8, 37)
-    assert (out[3]["sample_rate"], out[3]["n_frames"]) == (44100, 1000)
-    for mid in (4, 5):
-        assert out[mid]["sample_rate"] is None
-    assert out[4]["n_bytes"] == len(rows[3][2]) and out[5]["n_bytes"] is None
-
-
-def test_fake_audio_meta_is_deterministic(spark):
-    media = multimodal.documents_as_media(
-        spark.createDataFrame([(1, "hello world", "s")],
-                              "doc_id long, text string, source string"),
-        kind="audio",
-    )
-    a = multimodal.decode_audio_metadata(media, decoder="fake").collect()
-    b = multimodal.decode_audio_metadata(media, decoder="fake").collect()
-    assert a == b and a[0]["sample_rate"] in (8000, 16000, 22050, 44100, 48000)
+    meta = multimodal._wav_meta
+    assert meta(plain) == (44100, 2, 16, 1000)
+    assert meta(mono8) == (8000, 1, 8, 37)
+    assert meta(extra) == (44100, 2, 16, 1000)
+    assert meta(b"ID3\x03not really mp3") == (None,) * 4
 
 
 # ---------------------------------------------------------------------------
@@ -517,22 +481,12 @@ def test_decode_pixels_fake_is_deterministic_and_shuffle_free(spark):
     assert "Exchange" not in plan
 
 
-def test_default_decoder_is_real_on_all_four_entry_points(spark):
+def test_default_decoder_is_real_on_both_entry_points(spark):
     """VERDICT r15 task 2 pin: the no-knob call gets the REAL decoders.
     A naive caller on real media bytes must receive real metadata and
     pixels — and on non-media bytes must receive quarantined NULLs, not
     silently fabricated md5 pseudo-metadata (the fake path is opt-in)."""
-    import io
-    import wave
-
     png = _png(6, 5, color_type=2)  # RGB 6x5, mid-gray raster
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(2)
-        w.setsampwidth(2)
-        w.setframerate(44100)
-        w.writeframes(b"\x01" * (2 * 2 * 25))
-    wav = buf.getvalue()
     rows = [(1, "image", bytearray(png)), (2, "image", bytearray(b"not media"))]
     media = spark.createDataFrame(
         rows, "media_id long, kind string, payload binary")
@@ -546,21 +500,6 @@ def test_default_decoder_is_real_on_all_four_entry_points(spark):
     px = {r["media_id"]: r for r in multimodal.decode_pixels(media).collect()}
     assert bytes(px[1]["pixels"]) == b"\x7f" * (6 * 5 * 3)
     assert px[2]["pixels"] is None
-
-    audio = spark.createDataFrame(
-        [(1, "audio", bytearray(wav)), (2, "audio", bytearray(b"not audio"))],
-        "media_id long, kind string, payload binary")
-    am = {r["media_id"]: r
-          for r in multimodal.decode_audio_metadata(audio).collect()}
-    assert (am[1]["sample_rate"], am[1]["channels"], am[1]["bits"],
-            am[1]["n_frames"]) == (44100, 2, 16, 25)
-    assert am[2]["sample_rate"] is None
-
-    video = spark.createDataFrame(
-        [(1, "video", bytearray(b"not a video"))],
-        "media_id long, kind string, payload binary")
-    vm = multimodal.decode_video_metadata(video).collect()[0]
-    assert vm["width"] is None and vm["duration_ms"] is None
 
 
 def test_bmp_os2_core_header_metadata():
@@ -1338,178 +1277,6 @@ def test_metadata_filter_then_decode_late_composition(spark):
 # audio/video container metadata (r15): AIFF / FLAC / MP3 / MP4 headers
 # ---------------------------------------------------------------------------
 
-def test_aiff_metadata_matches_jvm_reference_writer(spark):
-    """decode_audio_metadata('real') on REAL AIFF bytes the JVM's
-    javax.sound.sampled writer produced — including the 80-bit
-    extended-float sample rate (22050 and the non-power-of-two 44100)."""
-    jvm = _jvm(spark)
-
-    def aiff(rate, ch, bits, frames):
-        af = jvm.javax.sound.sampled.AudioFormat(
-            float(rate), bits, ch, True, True)
-        data = jvm.java.io.ByteArrayInputStream(
-            bytearray(b"\x01" * (frames * ch * (bits // 8))))
-        ais = jvm.javax.sound.sampled.AudioInputStream(data, af, frames)
-        out = jvm.java.io.ByteArrayOutputStream()
-        jvm.javax.sound.sampled.AudioSystem.write(
-            ais, jvm.javax.sound.sampled.AudioFileFormat.Type.AIFF, out)
-        return bytes(out.toByteArray())
-
-    rows = [
-        (1, "audio", bytearray(aiff(22050, 2, 16, 100))),
-        (2, "audio", bytearray(aiff(44100, 1, 8, 37))),
-        (3, "audio", bytearray(aiff(8000, 2, 16, 5)[:20])),  # torn
-        (4, "audio", None),
-    ]
-    media = spark.createDataFrame(
-        rows, "media_id long, kind string, payload binary")
-    out = {r["media_id"]: r for r in
-           multimodal.decode_audio_metadata(media, decoder="real").collect()}
-    assert (out[1]["sample_rate"], out[1]["channels"], out[1]["bits"],
-            out[1]["n_frames"]) == (22050, 2, 16, 100)
-    assert (out[2]["sample_rate"], out[2]["channels"], out[2]["bits"],
-            out[2]["n_frames"]) == (44100, 1, 8, 37)
-    assert out[3]["sample_rate"] is None and out[4]["sample_rate"] is None
-
-
-def test_flac_and_mp3_header_metadata():
-    """Spec-built STREAMINFO and MPEG frame headers: FLAC's bit-packed
-    fields round-trip; MP3 reports rate/channels with bit depth and
-    frame count honestly NULL; ID3v2 tags are skipped by their
-    syncsafe size; reserved field combinations are rejected as false
-    syncs."""
-    from dirt_hadoop_similarity_spark.operators.multimodal import (
-        _flac_meta,
-        _mp3_meta,
-    )
-
-    def flac(rate, ch, bits, frames):
-        v = (rate << 44) | ((ch - 1) << 41) | ((bits - 1) << 36) | frames
-        si = bytes(10) + v.to_bytes(8, "big") + bytes(16)
-        return b"fLaC" + b"\x80" + len(si).to_bytes(3, "big") + si
-
-    assert _flac_meta(flac(44100, 2, 16, 123456)) == (44100, 2, 16, 123456)
-    assert _flac_meta(flac(96000, 8, 24, 1)) == (96000, 8, 24, 1)
-    assert _flac_meta(flac(44100, 2, 16, 9)[:20]) == (None,) * 4  # torn
-    bad = bytearray(flac(44100, 2, 16, 9))
-    bad[4] = 0x84  # first block not STREAMINFO
-    assert _flac_meta(bytes(bad)) == (None,) * 4
-
-    def mp3(b1, b2, b3, id3_pad=0):
-        head = b""
-        if id3_pad:
-            head = (b"ID3\x03\x00\x00"
-                    + bytes([0, 0, id3_pad >> 7, id3_pad & 0x7F])
-                    + b"\x00" * id3_pad)
-        return head + bytes([0xFF, b1, b2, b3]) + b"\x00" * 32
-
-    # MPEG1 Layer III, 44100, stereo
-    assert _mp3_meta(mp3(0xFB, 0x90, 0x00)) == (44100, 2, None, None)
-    # MPEG2, sr index 1 -> 24000, mono; behind a 200-byte ID3v2 tag
-    assert _mp3_meta(mp3(0xF3, 0x94, 0xC0, id3_pad=200)) == \
-        (24000, 1, None, None)
-    # reserved version (bits 01) is a false sync -> no frame found
-    assert _mp3_meta(mp3(0xEB, 0x90, 0x00)) == (None,) * 4
-
-
-def test_mp4_video_metadata_box_walk(spark):
-    """Spec-built ISO-BMFF: ftyp + moov{mvhd, audio trak (zero dims),
-    video trak} + mdat.  The walk finds the video track's 16.16 dims
-    and the mvhd duration, never touching mdat; torn boxes and
-    version-1 (64-bit) headers both work."""
-    import struct
-
-    def box(tag, body):
-        return struct.pack(">I", len(body) + 8) + tag + body
-
-    def tkhd(w, h, ver=0):
-        pre = bytes([ver]) + bytes(3)
-        pre += bytes(8 if ver == 0 else 16)  # created/modified
-        pre += struct.pack(">I", 1) + bytes(4)  # track id + reserved
-        pre += bytes(4 if ver == 0 else 8)  # duration
-        pre += bytes(8 + 2 + 2 + 2 + 2 + 36)  # reserved..matrix
-        return box(b"tkhd", pre + struct.pack(">II", w << 16, h << 16))
-
-    def mvhd(ts, dur, ver=0):
-        if ver == 0:
-            body = bytes([0, 0, 0, 0]) + bytes(8) + struct.pack(
-                ">II", ts, dur) + bytes(80)
-        else:
-            body = bytes([1, 0, 0, 0]) + bytes(16) + struct.pack(
-                ">IQ", ts, dur) + bytes(80)
-        return box(b"mvhd", body)
-
-    def mp4(ver=0):
-        moov = box(b"moov", mvhd(600, 7200, ver)
-                   + box(b"trak", tkhd(0, 0))        # audio track
-                   + box(b"trak", tkhd(1920, 1080, ver)))
-        return (box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2")
-                + moov + box(b"mdat", b"\x00" * 64))
-
-    rows = [
-        (1, "video", bytearray(mp4(0))),
-        (2, "video", bytearray(mp4(1))),   # 64-bit mvhd/tkhd variant
-        (3, "video", bytearray(mp4(0)[:40])),  # torn mid-moov
-        (4, "video", bytearray(b"not a video")),
-        (5, "video", None),
-    ]
-    media = spark.createDataFrame(
-        rows, "media_id long, kind string, payload binary")
-    out = {r["media_id"]: r for r in multimodal.decode_video_metadata(
-        media, decoder="real").collect()}
-    for mid in (1, 2):
-        assert (out[mid]["width"], out[mid]["height"],
-                out[mid]["duration_ms"]) == (1920, 1080, 12000), mid
-    for mid in (3, 4, 5):
-        assert out[mid]["width"] is None, mid
-    assert out[4]["n_bytes"] == 11 and out[5]["n_bytes"] is None
-
-    fake = multimodal.decode_video_metadata(media, decoder="fake").collect()
-    assert fake == multimodal.decode_video_metadata(media, decoder="fake").collect()
-
-
-def test_container_metadata_hostile_headers_quarantine():
-    """Code-review r15 pins on the container-metadata parsers: the
-    mvhd 'duration unknown' sentinel reports NULL rather than an
-    ~82-day fabrication; undersized mvhd/tkhd boxes quarantine rather
-    than reading sibling-box bytes; an invalid MP3 bitrate index is a
-    false sync; negative AIFF channel counts quarantine."""
-    import struct
-    from dirt_hadoop_similarity_spark.operators.multimodal import (
-        _aiff_meta,
-        _mp3_meta,
-        _mp4_video_meta,
-    )
-
-    def box(tag, body):
-        return struct.pack(">I", len(body) + 8) + tag + body
-
-    # duration sentinel: v0 all-ones
-    mvhd = box(b"mvhd", bytes(4) + bytes(8)
-               + struct.pack(">II", 600, 0xFFFFFFFF) + bytes(80))
-    tkhd_body = (bytes(4) + bytes(8) + struct.pack(">I", 1) + bytes(4)
-                 + bytes(4) + bytes(8 + 2 + 2 + 2 + 2 + 36)
-                 + struct.pack(">II", 640 << 16, 480 << 16))
-    moov = box(b"moov", mvhd + box(b"trak", box(b"tkhd", tkhd_body)))
-    mp4 = box(b"ftyp", b"isom\x00\x00\x02\x00") + moov
-    assert _mp4_video_meta(mp4) == (640, 480, None)
-
-    # undersized mvhd followed by a sibling whose bytes would parse
-    short_mvhd = box(b"mvhd", bytes(4))  # declared size 12
-    free = box(b"free", struct.pack(">II", 600, 7200) + bytes(72))
-    bad = box(b"ftyp", b"isom") + box(b"moov", short_mvhd + free)
-    assert _mp4_video_meta(bad) == (None, None, None)
-
-    # invalid bitrate index (0xF) is a false sync, not 44100 stereo
-    assert _mp3_meta(b"\xff\xfb\xf0\x00" + bytes(32)) == (None,) * 4
-
-    # negative AIFF channel count
-    comm = struct.pack(">hIh", -2, 100, 16) + struct.pack(
-        ">HQ", 16383 + 15, 44100 << 48)
-    aiff = (b"FORM" + struct.pack(">I", 4 + len(comm) + 8) + b"AIFF"
-            + b"COMM" + struct.pack(">I", len(comm)) + comm)
-    assert _aiff_meta(aiff) == (None,) * 4
-
 
 def test_tiff_dims_match_jdk_reference_writer(spark):
     """decode_metadata('real') on REAL TIFF bytes the JDK's bundled
@@ -1572,33 +1339,6 @@ def test_webp_dims_all_three_flavors():
     assert _real_dims(ext) == (1920, 1080, 4)
 
 
-def test_ogg_vorbis_and_opus_headers(spark):
-    """OGG identification packets through the audio metadata pass:
-    Vorbis and Opus report rate/channels with frame count honestly
-    NULL; a non-audio OGG (e.g. Theora) quarantines."""
-    import struct
-
-    def ogg_page(packet):
-        seg = bytes([len(packet)])
-        return (b"OggS\x00\x02" + bytes(20) + bytes([1]) + seg + packet)
-
-    vorbis = ogg_page(b"\x01vorbis" + bytes(4) + bytes([2])
-                      + struct.pack("<I", 44100) + bytes(16))
-    opus = ogg_page(b"OpusHead\x01" + bytes([1]) + bytes(2)
-                    + struct.pack("<I", 48000) + bytes(8))
-    theora = ogg_page(b"\x80theora" + bytes(16))
-    rows = [(1, "audio", bytearray(vorbis)), (2, "audio", bytearray(opus)),
-            (3, "audio", bytearray(theora))]
-    media = spark.createDataFrame(
-        rows, "media_id long, kind string, payload binary")
-    out = {r["media_id"]: r for r in multimodal.decode_audio_metadata(
-        media, decoder="real").collect()}
-    assert (out[1]["sample_rate"], out[1]["channels"]) == (44100, 2)
-    assert out[1]["n_frames"] is None
-    assert (out[2]["sample_rate"], out[2]["channels"]) == (48000, 1)
-    assert out[3]["sample_rate"] is None
-
-
 # ---------------------------------------------------------------------------
 # spec-derived byte-exact anchors (VERDICT r15 task 6): FLAC/MP3/OGG have
 # no reference encoder in-sandbox (javax.sound writes only WAV/AIFF/AU),
@@ -1606,92 +1346,6 @@ def test_ogg_vorbis_and_opus_headers(spark):
 # out by hand from the published specs — independent of both the parsers
 # and any fixture-builder function that could share a misreading with them
 # ---------------------------------------------------------------------------
-
-def test_flac_streaminfo_spec_literal_anchor():
-    """RFC 9639 (FLAC) §8.2: STREAMINFO packs, after 10 bytes of block
-    sizes/frame sizes, a big-endian 64-bit group of sample-rate(20) |
-    channels-1(3) | bits-per-sample-1(5) | total-samples(36).
-
-    Worked literal 1 — 44.1 kHz / stereo / 16-bit / 123456 samples:
-      rate   44100  = 0xAC44  -> 0b00001010110001000100 (20 bits)
-      ch-1   1               -> 0b001
-      bps-1  15              -> 0b01111
-      total  123456 = 0x1E240 -> 36-bit 0x00001E240
-      group  = 0xAC44<<44 | 1<<41 | 15<<36 | 0x1E240
-             = 0x0AC442F00001E240
-    Worked literal 2 — 96 kHz / mono / 24-bit / 1 sample:
-      group  = 0x17700<<44 | 0<<41 | 23<<36 | 1 = 0x1770017000000001
-    Container framing (§8.1): 'fLaC', block header byte 0x00
-    (not-last, type 0 = STREAMINFO), u24 length 34 (0x000022)."""
-    from dirt_hadoop_similarity_spark.operators.multimodal import (
-        _flac_meta,
-    )
-
-    def wrap(group_hex):
-        return (b"fLaC" + b"\x00" + b"\x00\x00\x22"
-                + b"\x10\x00\x10\x00" + bytes(6)   # blocksizes 4096
-                + bytes.fromhex(group_hex) + bytes(16))  # + md5
-
-    assert _flac_meta(wrap("0AC442F00001E240")) == (44100, 2, 16, 123456)
-    assert _flac_meta(wrap("1770017000000001")) == (96000, 1, 24, 1)
-
-
-def test_mp3_frame_header_spec_literal_anchor():
-    """ISO/IEC 11172-3 §2.4.1.3 (and ISO 13818-3 for MPEG2/2.5): the
-    textbook 32-bit frame headers as literals.
-
-    FF FB 90 64: sync 0x7FF | version 11 (MPEG1) | layer 01 (III) |
-    no-CRC 1; bitrate idx 1001 (128 kbps) | sr idx 00 (44100) | pad 0;
-    mode 01 (joint stereo) -> 2 channels.
-    FF E3 90 C0: version bits 00 = MPEG2.5 (13818-3 extension), layer
-    III; sr idx 00 -> 11025; mode 11 (single channel) -> 1.
-    ID3v2.4 §3.1: tag size is 4 SYNCSAFE bytes (7 bits each) —
-    00 00 02 01 -> (2<<7)|1 = 257 bytes to skip."""
-    from dirt_hadoop_similarity_spark.operators.multimodal import (
-        _mp3_meta,
-    )
-
-    frame = bytes.fromhex("FFFB9064") + bytes(128)
-    assert _mp3_meta(frame) == (44100, 2, None, None)
-    assert _mp3_meta(bytes.fromhex("FFE390C0") + bytes(64)) == \
-        (11025, 1, None, None)
-    id3 = b"ID3" + bytes.fromhex("0400 0000 000201".replace(" ", ""))
-    assert _mp3_meta(id3 + bytes(257) + frame) == (44100, 2, None, None)
-
-
-def test_ogg_vorbis_opus_spec_literal_anchor():
-    """RFC 3533 §6 (Ogg page) + Vorbis I spec §4.2.2 + RFC 7845 §5.1
-    (OpusHead), as literals.
-
-    Page header: 'OggS', version 0, header-type 0x02 (first page of
-    stream), 8-byte granule 0, serial 0x78563412 (LE bytes 12 34 56
-    78), sequence 0, CRC (ignored by a header-only parser; zeroed),
-    1 segment, lacing value = packet length.
-
-    Vorbis id packet (30 bytes): 0x01'vorbis', u32 LE version 0,
-    u8 channels 2, u32 LE rate 44100 (44 AC 00 00), 3 u32 bitrates,
-    blocksizes byte 0xB8, framing bit 01.
-    Opus id packet (19 bytes): 'OpusHead', u8 version 1, u8 channels 2,
-    u16 LE pre-skip 312 (38 01), u32 LE input rate 48000 (80 BB 00 00),
-    u16 output gain 0, u8 mapping family 0."""
-    from dirt_hadoop_similarity_spark.operators.multimodal import (
-        _ogg_audio_meta,
-    )
-
-    def page(packet):
-        return (b"OggS" + b"\x00" + b"\x02" + bytes(8)
-                + bytes.fromhex("12345678") + bytes(4) + bytes(4)
-                + bytes([1, len(packet)]) + packet)
-
-    vorbis = (b"\x01vorbis" + bytes(4) + b"\x02"
-              + bytes.fromhex("44AC0000") + bytes(12) + b"\xb8\x01")
-    assert len(vorbis) == 30
-    assert _ogg_audio_meta(page(vorbis)) == (44100, 2, None, None)
-
-    opus = (b"OpusHead" + b"\x01" + b"\x02" + bytes.fromhex("3801")
-            + bytes.fromhex("80BB0000") + bytes(2) + b"\x00")
-    assert len(opus) == 19
-    assert _ogg_audio_meta(page(opus)) == (48000, 2, None, None)
 
 
 def test_wav_torn_data_chunk_clamps_frame_count():

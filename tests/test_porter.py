@@ -52,11 +52,3 @@ def test_known_stems(word, expect):
 
 def test_none_returns_empty():
     assert porter_stem(None) == ""
-
-
-def test_pandas_udf_wrapper(spark):
-    from dirt_hadoop_similarity_spark.functions.porter import porter_stem_udf
-
-    df = spark.createDataFrame([("causes",), ("ponies",), (None,)], ["w"])
-    rows = df.select(porter_stem_udf()(df.w).alias("s")).collect()
-    assert [r.s for r in rows] == ["caus", "poni", None]

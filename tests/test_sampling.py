@@ -37,24 +37,12 @@ def test_split_stable_under_repartition(docs):
     assert left == right
 
 
-def test_sample_is_subset_and_stable(docs):
-    s1 = set(r["doc_id"] for r in
-             sampling.deterministic_sample(docs, 0.2, "doc_id").select("doc_id").collect())
-    s2 = set(r["doc_id"] for r in
-             sampling.deterministic_sample(docs.repartition(7), 0.2, "doc_id")
-             .select("doc_id").collect())
-    assert s1 == s2
-    assert 0 < len(s1) < docs.count()
-    # nested rates: a 10% sample is a subset of the 20% sample
-    s_small = set(r["doc_id"] for r in
-                  sampling.deterministic_sample(docs, 0.1, "doc_id")
-                  .select("doc_id").collect())
-    assert s_small <= s1
-
-
 def test_salt_decorrelates(docs):
     split = sampling.assign_split(docs, "doc_id", {"train": 0.5, "test": 0.5})
-    sample = sampling.deterministic_sample(docs, 0.5, "doc_id")
+    sample = docs.filter(
+        sampling.split_bucket(F.col("doc_id"), salt="sample")
+        < sampling.GRANULARITY // 2
+    )
     in_sample = set(r["doc_id"] for r in sample.select("doc_id").collect())
     trains = set(r["doc_id"] for r in
                  split.filter("split = 'train'").select("doc_id").collect())
@@ -67,8 +55,6 @@ def test_salt_decorrelates(docs):
 def test_validation(docs):
     with pytest.raises(ValueError):
         sampling.assign_split(docs, "doc_id", {"a": 0.5, "b": 0.2})
-    with pytest.raises(ValueError):
-        sampling.deterministic_sample(docs, 1.5, "doc_id")
 
 
 def test_reservoir_exact_k_uniform_deterministic(docs):
@@ -389,15 +375,12 @@ class TestCellBalancedSample:
                 for r in again.collect()}
 
     def test_trained_centroids_mode(self, spark):
-        # two tight direction clusters; 2 trained cells; cap 2 per cell
-        from dirt_hadoop_similarity_spark.operators.similarity import (
-            kmeans_centroids,
-        )
-
+        # two tight direction clusters; one given centroid each; cap 2
         rows = [(i, [1.0 + i * 1e-3, 0.0]) for i in range(5)]
         rows += [(10 + i, [0.0, 1.0 + i * 1e-3]) for i in range(5)]
         vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-        cent = kmeans_centroids(vecs, k=2, iters=2)
+        cent = spark.createDataFrame(
+            [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cell long, cvec array<float>")
         out = sampling.cell_balanced_sample(vecs, cap=2, centroids=cent)
         per_cell = {}
         for r in out.collect():

@@ -1,5 +1,5 @@
-"""Scale-mechanics tests: salting preserves results; bucketing removes
-exchanges from the physical plan."""
+"""Scale-mechanics tests: salting preserves results; static sizing,
+skew-safe windows and sessionization keep their plans and values."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,17 +20,6 @@ def skewed(spark):
     return hot.unionByName(cold)
 
 
-def test_salted_sum_matches_plain(skewed):
-    plain = {
-        r.k: r.s
-        for r in skewed.groupBy("k").agg(F.sum("v").alias("s")).collect()
-    }
-    salted = {
-        r.k: r.sum_v for r in scale.salted_sum(skewed, ["k"], "v").collect()
-    }
-    assert salted == plain
-
-
 def test_salted_join_matches_plain(skewed, spark):
     dim = spark.createDataFrame(
         [("hot", "H")] + [(f"cold{i}", f"C{i}") for i in range(50)],
@@ -47,60 +36,6 @@ def test_salted_join_matches_plain(skewed, spark):
     assert {tuple(r) for r in plain.collect()} == {
         tuple(r) for r in salted.collect()
     }
-
-
-def test_bucketed_join_has_no_exchange(spark):
-    # tables land in ./spark-warehouse (gitignored); warehouse dir is a
-    # static conf so it can't be redirected on a live session
-    a = spark.range(1000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("x")
-    )
-    b = spark.range(1000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("y")
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force the sort-merge path: with broadcast allowed the planner
-        # broadcasts these tiny tables and ignores bucketing entirely
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        scale.write_bucketed(a, "t_bucket_a", "k", buckets=8, sort_by="k")
-        scale.write_bucketed(b, "t_bucket_b", "k", buckets=8, sort_by="k")
-        joined = scale.bucketed_join(spark, "t_bucket_a", "t_bucket_b", "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan, plan
-        assert joined.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_bucket_a")
-        spark.sql("DROP TABLE IF EXISTS t_bucket_b")
-
-
-def test_semi_prune_exact_and_broadcast(spark, sf_dir):
-    """Pruning must not change join RESULTS, must actually drop
-    non-members, and must plan as a broadcast semi join (no shuffle of
-    the large side before the reduction)."""
-    from dirt_hadoop_similarity_spark.operators.scale import semi_prune
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
-    )
-    keys = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
-        .filter("o_orderstatus = 'F'")
-        .select("o_orderkey")
-        .limit(50)
-        .withColumnRenamed("o_orderkey", "l_orderkey")
-    )
-    plain = li.join(keys, "l_orderkey")
-    pruned_join = semi_prune(li, keys, "l_orderkey").join(keys, "l_orderkey")
-    assert plain.exceptAll(pruned_join).count() == 0
-    assert pruned_join.exceptAll(plain).count() == 0
-
-    pruned = semi_prune(li, keys, "l_orderkey")
-    assert 0 < pruned.count() < li.count()
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan
 
 
 def test_key_skew_profile_values_and_bounded_window(spark):
@@ -659,61 +594,6 @@ class TestSessionizeAuto:
             for r in QUERIES["sessionize"].fn(spark, sf_dir).collect()
         }
         assert auto == plain
-
-
-def test_date_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
-    """The date-partitioned layout must (a) round-trip values exactly,
-    (b) prune non-matching partition directories at PLANNING time — a
-    one-day predicate appears in the scan's PartitionFilters and the
-    scan touches only that day's files."""
-    from dirt_hadoop_similarity_spark.plans.queries import load
-
-    ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    path = str(tmp_path / "events_by_date")
-    scale.write_date_partitioned(ev, path, ts_col="ts")
-
-    back = spark.read.parquet(path)
-    day = back.select(F.min("event_date")).first()[0]
-    q = back.filter(F.col("event_date") == F.lit(day))
-    rows = q.collect()
-    # (a) values: same events as filtering the unpartitioned relation
-    want = {
-        r.event_id
-        for r in ev.filter(F.to_date("ts") == F.lit(day)).collect()
-    }
-    assert {r.event_id for r in rows} == want and rows
-    # (b) plan: the predicate rides PartitionFilters (applied to the
-    # file index at planning, not as a data filter) ...
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    import re
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "event_date" in m.group(1), plan
-
-    # ... and the scan's own metrics prove the pruning: exactly ONE
-    # partition directory read for the one-day query, versus every day
-    # for the unfiltered scan (inputFiles() can't show this — it lists
-    # the index before filters; the driver-side numPartitions metric
-    # posts on a scan's FIRST execution only, so build a fresh frame)
-    def scan_partitions(make_frame):
-        frame = make_frame()
-        frame.collect()
-        jleaves = frame._jdf.queryExecution().executedPlan().collectLeaves()
-        for i in range(jleaves.size()):
-            node = jleaves.apply(i)
-            if node.getClass().getSimpleName() == "FileSourceScanExec":
-                it = node.metrics().iterator()
-                while it.hasNext():
-                    kv = it.next()
-                    if kv._1() == "numPartitions":
-                        return kv._2().value()
-        raise AssertionError("no FileSourceScanExec found")
-
-    assert scan_partitions(
-        lambda: spark.read.parquet(path).filter(
-            F.col("event_date") == F.lit(day)
-        )
-    ) == 1
-    assert scan_partitions(lambda: spark.read.parquet(path)) > 1
 
 
 def test_static_partitions_saturates_at_session_conf(spark):

@@ -178,21 +178,3 @@ def test_skew_documents_hot_tokens_but_replicas_distinct(skew_corpus):
     # replica 1 still carries the ~1 marker → cross-replica distinctness
     assert any("~1" in t for t in texts[n:2 * n])
     assert texts[:n] != texts[n:2 * n]
-
-
-def test_sum_numfiles_sees_through_aqe(spark, tmp_path):
-    """ADVICE r11 regression: under AQE, executedPlan().collectLeaves()
-    on a shuffle-bearing query stops at ShuffleQueryStageExec and a
-    leaf-only numFiles sum reads 0 — partition_prune_bench's file
-    counter must recurse into the query stages and find the real scan
-    metric."""
-    from tools.partition_prune_bench import files_scanned
-
-    p = str(tmp_path / "t")
-    spark.range(100).selectExpr("id", "id % 7 AS k").repartition(
-        3
-    ).write.parquet(p)
-    df = spark.read.parquet(p).groupBy("k").count()  # shuffle-bearing
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    n = files_scanned(df)
-    assert n >= 3, f"AQE-nested scan metric not found (numFiles={n})"

@@ -49,6 +49,23 @@ def test_gemm_topk_matches_zipwith_exact(emb, spark, sf_dir):
     assert a == b
 
 
+def _assign_cells_reference(vectors, centroids):
+    """The crossJoin + window rendering of IVF assignment: each vector to
+    its max rounded-cosine centroid, ties to the lowest cell."""
+    scored = vectors.crossJoin(F.broadcast(centroids)).select(
+        "vec_id",
+        "cell",
+        similarity.quantized_cosine(F.col("embedding"), F.col("cvec"))
+        .alias("ccos"),
+    )
+    w = W.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("cell"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("vec_id", "cell")
+    )
+
+
 def test_assign_cells_gemm_matches_crossjoin(emb, spark, sf_dir):
     # tiny fixture incl. an exact-tie construction: vec 5 is equidistant
     # from centroids 0 and 2 — the rounded-cosine argmax must take the
@@ -58,7 +75,7 @@ def test_assign_cells_gemm_matches_crossjoin(emb, spark, sf_dir):
     cent = similarity.seed_centroids(e6, 3)
     a = sorted(
         (r["vec_id"], r["cell"])
-        for r in similarity.assign_cells(e6, cent).collect()
+        for r in _assign_cells_reference(e6, cent).collect()
     )
     b = sorted(
         (r["vec_id"], r["cell"])
@@ -70,7 +87,7 @@ def test_assign_cells_gemm_matches_crossjoin(emb, spark, sf_dir):
     cent = similarity.seed_centroids(e, 16)
     a = sorted(
         (r["vec_id"], r["cell"])
-        for r in similarity.assign_cells(e, cent).collect()
+        for r in _assign_cells_reference(e, cent).collect()
     )
     b = sorted(
         (r["vec_id"], r["cell"])
@@ -138,7 +155,7 @@ def test_assign_cells_gemm_fuzz(spark):
     cent = similarity.seed_centroids(e, 8)
     a = sorted(
         (r["vec_id"], r["cell"])
-        for r in similarity.assign_cells(e, cent).collect()
+        for r in _assign_cells_reference(e, cent).collect()
     )
     b = sorted(
         (r["vec_id"], r["cell"])
@@ -231,7 +248,9 @@ def test_rh_bucket_sign_semantics(emb, spark):
         r.vec_id: r.b
         for r in emb.select(
             "vec_id",
-            similarity.hyperplane_bucket(F.col("embedding"), planes).alias("b"),
+            similarity.hyperplane_bucket_q(
+                similarity._quantize(F.col("embedding")), planes
+            ).alias("b"),
         ).collect()
     }
     # recompute driver-side with exact integer math
@@ -272,48 +291,6 @@ def test_rh_recall_not_worse_than_axis_sign(spark, sf_dir):
     assert len(rh & truth) >= len(ax & truth)
 
 
-def test_kmeans_separates_blobs(spark):
-    """Two clean angular blobs: 5 Lloyd's iterations must put each blob's
-    members in one cell, and the two cells must differ."""
-    rows = (
-        # blob A ~ +x axis, blob B ~ +y axis (ids interleaved so the
-        # first-2 seeds land one in each blob)
-        [(0, [1.0, 0.05 * i, 0.0, 0.0]) for i in range(1)]
-        + [(1, [0.05, 1.0, 0.0, 0.0])]
-        + [(2 + i, [1.0, 0.02 * i, 0.0, 0.0]) for i in range(10)]
-        + [(12 + i, [0.02 * i, 1.0, 0.0, 0.0]) for i in range(10)]
-    )
-    emb_df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cent = similarity.kmeans_centroids(emb_df, k=2, iters=5)
-    assigned = similarity.assign_cells(emb_df, cent)
-    cells = {r.vec_id: r.cell for r in assigned.collect()}
-    blob_a = {0} | set(range(2, 12))
-    blob_b = {1} | set(range(12, 22))
-    cells_a = {cells[v] for v in blob_a}
-    cells_b = {cells[v] for v in blob_b}
-    assert len(cells_a) == 1 and len(cells_b) == 1
-    assert cells_a != cells_b
-
-
-def test_kmeans_keeps_k_when_cell_empties(spark):
-    """Near-identical seeds: ids 0 and 1 are the same vector, so after
-    the first assignment one of the two seed cells attracts nothing
-    (ties break to the lower cell).  The trainer must keep k centroids
-    instead of silently shrinking the codebook."""
-    rows = (
-        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [1.0, 0.0, 0.0, 0.0]),
-         (2, [0.0, 1.0, 0.0, 0.0])]
-        + [(3 + i, [1.0, 0.01 * i, 0.0, 0.0]) for i in range(5)]
-        + [(8 + i, [0.01 * i, 1.0, 0.0, 0.0]) for i in range(5)]
-    )
-    emb_df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cent = similarity.kmeans_centroids(emb_df, k=3, iters=3)
-    rows_out = cent.collect()
-    assert len(rows_out) == 3
-    assert {r.cell for r in rows_out} == {0, 1, 2}
-    assert all(len(r.cvec) == 4 for r in rows_out)
-
-
 def test_trained_ivfpq_codebook_lineage_is_severed(spark, sf_dir):
     """The train_iters>0 codebook must NOT keep a lazy lineage into the
     corpus-sized residual relation (which ivfpq_build unpersists before
@@ -332,16 +309,6 @@ def test_trained_ivfpq_codebook_lineage_is_severed(spark, sf_dir):
     assert {r["query_id"] for r in out} == {40, 41}
 
 
-def test_pq_codebook_keeps_full_shape(spark, sf_dir):
-    """The trained PQ codebook must stay m × ksub even when codes empty
-    during training (duplicate seeds make that likely)."""
-    emb_df = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(40)
-    cb = similarity.pq_train_codebooks(emb_df, m=4, dsub=4, ksub=8, iters=3)
-    counts = {r.sub: r.n for r in cb.groupBy("sub").agg(
-        F.count(F.lit(1)).alias("n")).collect()}
-    assert counts == {0: 8, 1: 8, 2: 8, 3: 8}
-
-
 def test_ivf_topk_candidates_come_from_probed_cells(spark, sf_dir):
     from dirt_hadoop_similarity_spark.plans.queries import load
 
@@ -351,12 +318,15 @@ def test_ivf_topk_candidates_come_from_probed_cells(spark, sf_dir):
     assert len(rows) > 0
     # every neighbor must be assigned to one of the query's 2 probed cells
     cent = similarity.seed_centroids(emb_t, 16)
-    assigned = {r.vec_id: r.cell for r in similarity.assign_cells(emb_t, cent).collect()}
+    assigned = {
+        r.vec_id: r.cell
+        for r in _assign_cells_reference(emb_t, cent).collect()
+    }
     import pyspark.sql.functions as F
 
     probes = {
         r.cell
-        for r in similarity.assign_cells(
+        for r in _assign_cells_reference(
             emb_t.filter(F.col("vec_id") == 7), cent
         ).collect()
     }  # top-1 probe is the assignment cell; nprobe=2 is a superset
@@ -369,7 +339,8 @@ def test_ivf_with_trained_codebook_runs(spark, sf_dir):
     from dirt_hadoop_similarity_spark.plans.queries import load
 
     emb_t = load(spark, sf_dir, "embeddings")
-    cent = similarity.kmeans_centroids(emb_t, k=8, iters=2)
+    # a given 8-cell codebook in place of the 16 default seeds
+    cent = similarity.seed_centroids(emb_t, 8)
     out = similarity.ivf_topk(
         emb_t, [3, 9], k=3, nprobe=2, centroids=cent
     ).collect()
@@ -439,32 +410,6 @@ def test_pq_adc_recall_vs_exact_l2(spark, sf_dir):
     assert recall >= 0.12, recall
 
 
-def test_pq_trained_codebooks_not_worse(spark, sf_dir):
-    """Trained codebooks must run end-to-end and produce full top-5
-    result sets; quantization error must not exceed the seed codebook's
-    (Lloyd's steps only decrease within-cell distance)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    seed_cb = similarity.pq_seed_codebooks(emb, m=8, dsub=8, ksub=16)
-    trained_cb = similarity.pq_train_codebooks(emb, m=8, dsub=8, ksub=16, iters=2)
-
-    def total_d2(cb):
-        subs = emb.select(
-            "vec_id",
-            F.posexplode(
-                similarity.subvector_split(F.col("embedding"), 8, 8)
-            ).alias("sub", "svec"),
-        )
-        joined = subs.join(cb, "sub").withColumn(
-            "d2", similarity._int_d2(F.col("svec"), F.col("cvec"))
-        )
-        best = joined.groupBy("vec_id", "sub").agg(F.min("d2").alias("d2"))
-        return best.agg(F.sum("d2")).first()[0]
-
-    assert total_d2(trained_cb) <= total_d2(seed_cb)
-    out = similarity.pq_adc_topk(emb, list(range(5)), k=5, codebooks=trained_cb)
-    assert out.count() == 25
-
-
 class TestSemanticDedup:
     def test_keep_drop_by_cell_and_threshold(self, spark):
         # a, b share direction (cos 1) in the all-positive cell; d is in
@@ -526,12 +471,14 @@ class TestSemanticDedupScaleModes:
 
     def test_trained_centroids_mode(self, spark):
         import math
-        # two tight direction clusters + one outlier; 2 trained cells
+        # two tight direction clusters + one outlier; one given
+        # centroid per cluster
         rows = [(i, [1.0 + i * 1e-3, 0.0]) for i in range(4)]
         rows += [(10 + i, [0.0, 1.0 + i * 1e-3]) for i in range(4)]
         rows += [(99, [math.cos(math.radians(45)), math.sin(math.radians(45))])]
         emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-        cent = similarity.kmeans_centroids(emb, k=2, iters=2)
+        cent = spark.createDataFrame(
+            [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cell long, cvec array<float>")
         out = {r["vec_id"]: r for r in similarity.semantic_dedup(
             emb, threshold=0.99, centroids=cent).collect()}
         assert len(out) == 9
@@ -604,7 +551,7 @@ class TestIvfPq:
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         out = similarity.ivfpq_topk(emb, [0, 1], k=5, nprobe=1)
         cent = similarity.seed_centroids(emb)
-        assigned = similarity.assign_cells(emb, cent).select(
+        assigned = _assign_cells_reference(emb, cent).select(
             F.col("vec_id").alias("neighbor_id"), "cell")
         got = out.join(assigned, "neighbor_id").select(
             "query_id", "cell").distinct().collect()

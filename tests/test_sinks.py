@@ -1,8 +1,6 @@
-"""TSV export / Parquet checkpoint round-trips."""
+"""TSV export round-trip."""
 
 import tempfile
-
-from pyspark.sql import functions as F
 
 from dirt_hadoop_similarity_spark.sources import sinks
 
@@ -16,196 +14,8 @@ def test_tsv_roundtrip(spark):
     with tempfile.TemporaryDirectory() as d:
         path = f"{d}/sims_tsv"
         sinks.write_tsv(df, path, coalesce=1)
-        back = sinks.read_tsv(spark, path, "p1 STRING, p2 STRING, score DOUBLE")
+        back = spark.read.csv(
+            path, schema="p1 STRING, p2 STRING, score DOUBLE", sep="\t"
+        )
         got = {(r.p1, r.p2): r.score for r in back.collect()}
     assert got == {(r.p1, r.p2): r.score for r in df.collect()}
-
-
-def test_checkpoint_parquet_roundtrip(spark):
-    df = spark.range(100).select(
-        F.col("id"), (F.col("id") % 3).alias("part")
-    )
-    with tempfile.TemporaryDirectory() as d:
-        back = sinks.checkpoint_parquet(df, f"{d}/ckpt", partition_by=["part"])
-        assert back.count() == 100
-        assert set(back.columns) == {"id", "part"}
-
-
-def test_jsonl_roundtrip(spark, tmp_path):
-    from dirt_hadoop_similarity_spark.sources.sinks import read_jsonl, write_jsonl
-
-    df = spark.createDataFrame(
-        [(1, "hello world", "en"), (2, 'quotes " and\ttabs', "de")],
-        "doc_id long, text string, lang string",
-    )
-    out = str(tmp_path / "jsonl")
-    write_jsonl(df, out)
-    back = read_jsonl(spark, out, schema="doc_id long, text string, lang string")
-    # clean corpus: the auto-appended quarantine column is all-NULL
-    # (collect, not count — count() prunes every data column away and
-    # Spark disallows queries referencing ONLY the corrupt column on a
-    # raw JSON scan)
-    assert back.filter("_corrupt_record IS NOT NULL").collect() == []
-    assert sorted(
-        tuple(r) for r in back.drop("_corrupt_record").collect()
-    ) == sorted(tuple(r) for r in df.collect())
-
-
-def test_jsonl_corrupt_line_quarantined(spark, tmp_path):
-    from dirt_hadoop_similarity_spark.sources.sinks import read_jsonl
-
-    p = tmp_path / "bad.jsonl"
-    p.write_text('{"doc_id": 1, "text": "ok"}\nnot json at all\n')
-    back = read_jsonl(
-        spark, str(p),
-        schema="doc_id long, text string, _corrupt_record string",
-    )
-    rows = back.collect()
-    assert len(rows) == 2
-    bad = [r for r in rows if r["_corrupt_record"] is not None]
-    assert len(bad) == 1 and bad[0]["doc_id"] is None
-
-
-def _parquet_files(root):
-    import pathlib
-
-    return [
-        p for p in pathlib.Path(root).rglob("*.parquet") if p.is_file()
-    ]
-
-
-def test_compact_parquet_merges_small_files(spark, tmp_path):
-    df = spark.range(1000).select(
-        F.col("id"), (F.col("id") % 7).alias("v")
-    )
-    src = str(tmp_path / "small")
-    # simulate an ingest that left a 64-file sliver mess
-    df.repartition(64).write.parquet(src)
-    assert len(_parquet_files(src)) == 64
-    out = str(tmp_path / "compact")
-    parts = sinks.compact_parquet(spark, src, out, target_rows_per_file=500)
-    assert parts == 2
-    files = _parquet_files(out)
-    assert len(files) <= 3  # ceil(1000/500) + AQE slack
-    back = spark.read.parquet(out)
-    assert back.count() == 1000
-    assert sorted(r.id for r in back.collect()) == list(range(1000))
-
-
-def test_compact_parquet_partitioned_layout(spark, tmp_path):
-    df = spark.range(900).select(
-        F.col("id"), (F.col("id") % 3).alias("day")
-    )
-    src = str(tmp_path / "src")
-    df.repartition(30).write.partitionBy("day").parquet(src)
-    # sliver mess: up to 30 files inside EACH day partition
-    assert len(_parquet_files(src)) > 30
-    out = str(tmp_path / "compact")
-    sinks.compact_parquet(
-        spark, src, out, target_rows_per_file=500, partition_by=["day"]
-    )
-    files = _parquet_files(out)
-    # keyed repartition → each day's rows land in few tasks
-    assert len(files) <= 6, files
-    assert spark.read.parquet(out).count() == 900
-
-
-def test_partitioned_layout_prunes_partitions(spark, tmp_path):
-    """The hive-partitioned checkpoint must turn an equality filter on
-    the partition column into PartitionFilters (directory pruning) —
-    never a full-scan-then-filter."""
-    df = spark.range(300).select(
-        F.col("id"), (F.col("id") % 3).alias("day")
-    )
-    path = str(tmp_path / "bydate")
-    back = sinks.checkpoint_parquet(df, path, partition_by=["day"])
-    q = back.filter(F.col("day") == 1)
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "day" in plan.split(
-        "PartitionFilters", 1
-    )[1][:120], plan
-    assert q.count() == 100
-
-
-def test_jsonl_corrupt_line_quarantined_by_default(spark, tmp_path):
-    """The quarantine column must not depend on the caller remembering
-    to declare it: a schema WITHOUT _corrupt_record still quarantines —
-    previously every malformed line became an all-NULL row that
-    silently entered the corpus."""
-    from dirt_hadoop_similarity_spark.sources.sinks import read_jsonl
-
-    p = tmp_path / "bad2.jsonl"
-    p.write_text('{"doc_id": 1, "text": "ok"}\nnot json at all\n')
-    back = read_jsonl(spark, str(p), schema="doc_id long, text string")
-    rows = back.collect()
-    assert set(back.columns) == {"doc_id", "text", "_corrupt_record"}
-    bad = [r for r in rows if r["_corrupt_record"] is not None]
-    assert len(bad) == 1 and bad[0]["_corrupt_record"] == "not json at all"
-    good = [r for r in rows if r["_corrupt_record"] is None]
-    assert len(good) == 1 and good[0]["doc_id"] == 1
-
-    # opt-out keeps the legacy shape (and the silent-null behavior)
-    plain = read_jsonl(spark, str(p), schema="doc_id long, text string",
-                       corrupt_col=None)
-    assert set(plain.columns) == {"doc_id", "text"}
-
-
-def test_jsonl_schemaless_read_honors_nondefault_corrupt_col(
-    spark, tmp_path
-):
-    """ADVICE r13: a custom corrupt_col on an INFERRED-schema read used
-    to be a silent no-op (the option lived inside the schema branch) —
-    Spark inferred its default '_corrupt_record' instead.  The option
-    is now set on both paths, so inference surfaces malformed lines
-    under the caller's name."""
-    from dirt_hadoop_similarity_spark.sources.sinks import read_jsonl
-
-    p = tmp_path / "bad5.jsonl"
-    p.write_text('{"doc_id": 1, "text": "ok"}\nnot json either\n')
-    back = read_jsonl(spark, str(p), corrupt_col="bad_rec")
-    assert "bad_rec" in back.columns and "_corrupt_record" not in back.columns
-    bad = [r for r in back.cache().collect() if r["bad_rec"] is not None]
-    assert len(bad) == 1 and bad[0]["bad_rec"] == "not json either"
-
-
-def test_jsonl_quarantine_survives_superstring_column_name(spark, tmp_path):
-    """Membership is exact field-name, not substring (ADVICE r12): a
-    schema whose column merely CONTAINS '_corrupt_record' must still
-    get the quarantine column appended."""
-    from dirt_hadoop_similarity_spark.sources.sinks import read_jsonl
-
-    p = tmp_path / "bad3.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "raw_corrupt_record_txt": "x"}\nnot json\n'
-    )
-    back = read_jsonl(
-        spark, str(p), schema="doc_id long, raw_corrupt_record_txt string"
-    )
-    assert set(back.columns) == {
-        "doc_id", "raw_corrupt_record_txt", "_corrupt_record"
-    }
-    bad = [r for r in back.collect() if r["_corrupt_record"] is not None]
-    assert len(bad) == 1 and bad[0]["_corrupt_record"] == "not json"
-
-
-def test_jsonl_quarantine_honors_predeclared_nondefault_column(
-    spark, tmp_path
-):
-    """A caller who declares the corrupt column IN their schema under a
-    non-default name must still get quarantine: the option-setting used
-    to live only in the append branch, so Spark fell back to its
-    default '_corrupt_record' name (absent from the schema) and the
-    malformed line became an all-NULL row."""
-    from dirt_hadoop_similarity_spark.sources.sinks import read_jsonl
-
-    p = tmp_path / "bad4.jsonl"
-    p.write_text('{"doc_id": 1}\nnot json\n')
-    back = read_jsonl(
-        spark, str(p), schema="doc_id long, bad_rec string",
-        corrupt_col="bad_rec",
-    )
-    assert set(back.columns) == {"doc_id", "bad_rec"}
-    rows = back.collect()
-    bad = [r for r in rows if r["bad_rec"] is not None]
-    assert len(bad) == 1 and bad[0]["bad_rec"] == "not json"
-    assert not [r for r in rows if r["doc_id"] is None and r["bad_rec"] is None]

@@ -1,15 +1,31 @@
 """Structured Streaming smoke tests: real streaming queries driven to
 completion on static parquet via the memory sink."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from dirt_hadoop_similarity_spark.streaming import events as sev
 
 
+def _drain(spark, df, name, mode="append"):
+    """Run a streaming DataFrame to completion into a memory sink and
+    return the result table."""
+    q = (
+        df.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return spark.table(name)
+
+
 def test_windowed_counts_stream_matches_batch(spark, sf_dir):
-    stream_result = sev.run_windowed_counts_smoke(
-        spark, sf_dir, query_name="wc_smoke_test"
+    stream_result = _drain(
+        spark, sev.windowed_counts(sev.stream_events(spark, sf_dir)),
+        "wc_smoke_test", mode="complete",
     )
     batch = sev.windowed_counts(
         spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -119,124 +135,20 @@ def test_stateful_sessionize_matches_batch_oracle(spark, sf_dir):
     assert got == batch
 
 
-def test_stream_quality_gate_equals_batch(spark, sf_dir):
-    """The stateless ingest gate must admit exactly the documents the
-    batch funnel's stage-4 predicate admits (same scores, same rows)."""
-    from dirt_hadoop_similarity_spark.operators import curation
-    from dirt_hadoop_similarity_spark.streaming import corpus
-
-    streamed = corpus.run_quality_gate_smoke(
-        spark, sf_dir, query_name="qgate_eq_batch"
-    )
-    batch = curation.quality_gate(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-    )
-    s_rows = {
-        r["doc_id"]: (r["quality"], r["predicted_lang"])
-        for r in streamed.select("doc_id", "quality", "predicted_lang").collect()
-    }
-    b_rows = {
-        r["doc_id"]: (r["quality"], r["predicted_lang"])
-        for r in batch.select("doc_id", "quality", "predicted_lang").collect()
-    }
-    assert s_rows == b_rows
-    assert len(s_rows) > 0
-    # and it agrees with the funnel's keep_quality flag
-    ann = curation.annotate(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    flagged = {r["doc_id"] for r in ann.filter("keep_quality").collect()}
-    # gate is dedup-unaware: flagged is gate-survivors minus dup drops
-    assert flagged <= set(s_rows)
-
-
-def test_stream_to_parquet_exactly_once_across_restarts(spark, sf_dir, tmp_path):
-    """Re-running the same stream with the same checkpoint must append
-    ZERO rows: the offset log + file-commit log give exactly-once."""
-    from dirt_hadoop_similarity_spark.streaming import events as sev
-
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    src = sev.stream_events(spark, sf_dir)
-    gated = sev.normalize_event_ts(src).filter("event_type = 'purchase'")
-
-    sev.run_stream_to_parquet(gated, out, ckpt, query_name="e1_once")
-    n_first = spark.read.parquet(out).count()
-    assert n_first > 0
-
-    # restart with the SAME checkpoint: source offsets already committed
-    src2 = sev.stream_events(spark, sf_dir)
-    gated2 = sev.normalize_event_ts(src2).filter("event_type = 'purchase'")
-    sev.run_stream_to_parquet(gated2, out, ckpt, query_name="e1_once_again")
-    n_second = spark.read.parquet(out).count()
-    assert n_second == n_first
-
-    # and the content matches the batch filter exactly
-    batch = (
-        sev.normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
-        .filter("event_type = 'purchase'")
-        .count()
-    )
-    assert n_first == batch
-
-
-def test_incremental_dedup_stream_matches_batch(spark, sf_dir, tmp_path):
-    """Dedup-at-ingest: the foreachBatch stream against a persisted
-    signature index must keep exactly the docs the batch operator keeps,
-    regardless of micro-batch splits (2 files -> 2 batches here)."""
-    from dirt_hadoop_similarity_spark.operators import dedup
-    from dirt_hadoop_similarity_spark.streaming import corpus as sco
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    corpus = docs.filter(F.col("doc_id") < 300)
-    new_docs = docs.filter(F.col("doc_id") >= 300)
-
-    index_path = str(tmp_path / "sig_index")
-    dedup.signature_index(corpus).write.parquet(index_path)
-
-    # land the new docs as two files so availableNow runs >1 micro-batch
-    landing = tmp_path / "landing"
-    new_docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
-        str(landing / "f0")
-    )
-    new_docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(
-        str(landing / "f1")
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(sco.DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .load(str(landing))
-    )
-
-    out_path = str(tmp_path / "deduped")
-    sco.run_incremental_dedup_stream(
-        spark, stream, index_path, out_path, str(tmp_path / "ckpt"),
-        query_name="incr_dedup_test",
-    )
-    got = {r.doc_id for r in spark.read.parquet(out_path).collect()}
-
-    dups = dedup.incremental_near_duplicates(
-        spark.read.parquet(index_path), new_docs
-    ).filter(F.col("est_jaccard") >= 0.5)
-    expect = {
-        r.doc_id
-        for r in new_docs.join(
-            dups.select(F.col("batch_id").alias("doc_id")).distinct(),
-            "doc_id",
-            "left_anti",
-        ).collect()
-    }
-    assert got == expect
-    assert len(got) < new_docs.count()  # the index really dropped dups
-
-
 def test_stream_redaction_gate_equals_batch(spark, sf_dir):
     """PII redaction + classifier scoring are stateless, so the stream
     must produce byte-identical redacted text and logits to batch."""
     from dirt_hadoop_similarity_spark.operators import curation
-    from dirt_hadoop_similarity_spark.streaming import corpus
 
-    streamed = corpus.run_redaction_gate_smoke(
-        spark, sf_dir, query_name="redact_eq_batch")
+    docs = (
+        spark.readStream.format("parquet")
+        .schema("doc_id long, text string, lang string, source string, "
+                "n_chars long")
+        .option("pathGlobFilter", "documents.parquet")
+        .load(sf_dir)
+    )
+    streamed = _drain(
+        spark, curation.redact_and_score(docs), "redact_eq_batch")
     batch = curation.redact_and_score(
         spark.read.parquet(f"{sf_dir}/documents.parquet"))
     cols = ["doc_id", "text", "clf_logit", "clf_keep"]
@@ -247,414 +159,6 @@ def test_stream_redaction_gate_equals_batch(spark, sf_dir):
     assert s == b
     assert len(s) > 0
     assert any(v[2] for v in s.values()) and not all(v[2] for v in s.values())
-
-
-def test_lm_score_stream_matches_batch(spark, sf_dir, tmp_path):
-    """Score-at-ingest against a persisted LM: the foreachBatch stream
-    must produce exactly the batch scorer's integer verdicts for every
-    doc, regardless of micro-batch splits (2 files -> 2 batches)."""
-    from dirt_hadoop_similarity_spark.operators import lm
-    from dirt_hadoop_similarity_spark.streaming import corpus as sco
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    target = docs.filter(F.col("lang") == "en")
-    incoming = docs.filter(F.col("doc_id") >= 250)
-
-    uni, bi = lm.train_bigram_lm(target)
-    uni_path, bi_path = str(tmp_path / "lm_uni"), str(tmp_path / "lm_bi")
-    uni.write.parquet(uni_path)
-    bi.write.parquet(bi_path)
-
-    landing = tmp_path / "landing"
-    incoming.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
-        str(landing / "f0")
-    )
-    incoming.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(
-        str(landing / "f1")
-    )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(sco.DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .load(str(landing))
-    )
-
-    out_path = str(tmp_path / "scored")
-    thr = -3_420_000
-    sco.run_lm_score_stream(
-        spark, stream, uni_path, bi_path, out_path,
-        str(tmp_path / "ckpt"), mean_lp_min_micro=thr,
-        query_name="lm_score_test",
-    )
-    got = {
-        r["doc_id"]: (r["n_transitions"], r["lp_micro_sum"], r["keep"])
-        for r in spark.read.parquet(out_path).collect()
-    }
-
-    expect = {
-        r["doc_id"]: (r["n_transitions"], r["lp_micro_sum"], r["keep"])
-        for r in lm.score_documents(
-            incoming, spark.read.parquet(uni_path),
-            spark.read.parquet(bi_path), mean_lp_min_micro=thr,
-        ).collect()
-    }
-    assert got == expect
-    assert len(got) == incoming.count()
-    keeps = [v[2] for v in got.values()]
-    assert any(keeps) and not all(keeps)  # threshold actually splits
-
-
-def test_anomaly_score_stream_matches_batch(spark, sf_dir, tmp_path):
-    """Score-at-ingest against persisted per-user stats: the
-    foreachBatch stream must produce exactly the batch scorer's flagged
-    rows, regardless of micro-batch splits (2 files -> 2 batches)."""
-    from dirt_hadoop_similarity_spark.operators import anomaly
-    from dirt_hadoop_similarity_spark.streaming import events as sev
-
-    history = spark.createDataFrame(
-        [(i, i % 7, 10.0 + (i % 5) + (90.0 if i % 19 == 0 else 0.0))
-         for i in range(200)],
-        ["event_id", "user_id", "value"],
-    )
-    stats_path = str(tmp_path / "stats")
-    anomaly.value_stats(history).write.parquet(stats_path)
-
-    landing = tmp_path / "landing"
-    history.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
-        str(landing / "f0"))
-    history.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
-        str(landing / "f1"))
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("event_id long, user_id long, value double")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .load(str(landing))
-    )
-
-    out_path = str(tmp_path / "flagged")
-    sev.run_anomaly_score_stream(
-        spark, stream, stats_path, out_path, str(tmp_path / "ckpt"),
-        z_threshold=2.0, query_name="anomaly_score_test",
-    )
-    got = {(r["event_id"], r["user_id"], r["z"])
-           for r in spark.read.parquet(out_path).collect()}
-    expect = {(r["event_id"], r["user_id"], r["z"])
-              for r in anomaly.score(
-                  history, spark.read.parquet(stats_path),
-                  z_threshold=2.0).collect()}
-    assert got == expect
-    assert got  # spikes actually flagged
-
-
-def test_session_window_stream_emits_closed_and_evicts(spark, sf_dir):
-    """Native session windows, both laws pinned on the replayed corpus:
-    append-mode emission == the batch relation's CLOSED sessions (end
-    <= final watermark), and the surviving state rows == the OPEN
-    session count — state bounded by active sessions, not users or
-    events."""
-    from pyspark.sql import functions as F
-
-    from dirt_hadoop_similarity_spark.streaming import events as sev
-
-    name = "sw_stream_test"
-    q = (
-        sev.session_window_counts(sev.stream_events(spark, sf_dir))
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        ops = (q.lastProgress or {}).get("stateOperators") or []
-        state_rows = sum(int(o.get("numRowsTotal", 0)) for o in ops)
-    finally:
-        q.stop()
-    got = {
-        (r.user_id, r.session_start_us, r.session_end_us, r.n_events)
-        for r in spark.table(name).collect()
-    }
-    spark.catalog.dropTempView(name)
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    batch = {
-        (r.user_id, r.session_start_us, r.session_end_us, r.n_events)
-        for r in sev.session_window_counts(ev).collect()
-    }
-    wm_us = (
-        sev.normalize_event_ts(ev)
-        .agg(F.unix_micros(F.max("ts"))).first()[0]
-        - 30 * 60 * 1_000_000
-    )
-    closed = {t for t in batch if t[2] <= wm_us}
-    open_n = len(batch) - len(closed)
-    assert got == closed
-    assert state_rows == open_n
-    assert len(got) > 0 and open_n > 0  # both regimes actually exercised
-
-
-def test_sessionize_ttl_evicts_idle_users_and_bounds_state(spark, tmp_path):
-    """The bounded-state twin of sessionize_stateful: users idle past
-    the event-time ttl EMIT a final row and their state row is EVICTED,
-    so state == users active within the ttl horizon (the no-TTL twin
-    keeps one row per user forever).  Replay: file f0 carries users
-    1-3 (two sessions each) + user 99's first event; f1 (5 h later)
-    carries only user 99 — its watermark advance must evict 1-3 with
-    their exact final counts and keep 99 live."""
-    import datetime as dt
-
-    from dirt_hadoop_similarity_spark.streaming import events as sev
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-
-    def ev(eid, uid, minutes):
-        return (eid, t0 + dt.timedelta(minutes=minutes), uid, "click",
-                1.0, "{}")
-
-    schema = ("event_id long, ts timestamp_ntz, user_id long, "
-              "event_type string, value double, props string")
-    f0_rows = [ev(1, 1, 1), ev(2, 1, 41),   # 2 sessions (gap 30 min)
-               ev(3, 2, 2), ev(4, 2, 42),
-               ev(5, 3, 3), ev(6, 3, 43),
-               ev(7, 99, 0)]
-    f1_rows = [ev(8, 99, 300), ev(9, 99, 301)]  # 5 h later: new session
-    landing = tmp_path / "landing"
-    # sequential writes order modification times; the file source
-    # processes oldest-first (latestFirst defaults false)
-    spark.createDataFrame(f0_rows, schema).coalesce(1).write.parquet(
-        str(landing / "f0"))
-    spark.createDataFrame(f1_rows, schema).coalesce(1).write.parquet(
-        str(landing / "f1"))
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .load(str(landing))
-    )
-
-    out = sev.sessionize_stateful_ttl(
-        stream, gap_seconds=1800, ttl_seconds=7200, watermark="10 minutes",
-    )
-    name = "sess_ttl_test"
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        ops = (q.lastProgress or {}).get("stateOperators") or []
-        state_rows = sum(int(o.get("numRowsTotal", 0)) for o in ops)
-    finally:
-        q.stop()
-    rows = spark.table(name).collect()
-    spark.catalog.dropTempView(name)
-
-    evicted = {(r.user_id, r.n_sessions, r.n_events)
-               for r in rows if r.evicted}
-    # users 1-3 idled past ttl: final counts flushed, exactly once each
-    assert evicted == {(1, 2, 2), (2, 2, 2), (3, 2, 2)}
-    assert sum(1 for r in rows if r.evicted) == 3
-    # user 99 stayed live: running counts reach (2 sessions, 3 events),
-    # never an evicted row
-    live99 = {(r.n_sessions, r.n_events)
-              for r in rows if r.user_id == 99 and not r.evicted}
-    assert (2, 3) in live99
-    assert not any(r.evicted for r in rows if r.user_id == 99)
-    # THE STATE LAW: only the live user holds a state row (the no-TTL
-    # twin would hold 4 — one per user ever seen)
-    assert state_rows == 1
-    # final per-user totals (evicted + live) == the batch gap rule over
-    # the full corpus — eviction lost no counts on this replay
-    all_events = spark.createDataFrame(f0_rows + f1_rows, schema)
-    from dirt_hadoop_similarity_spark.operators import scale
-    batch = {
-        r.user_id: (r.n_sessions, r.n_events)
-        for r in scale.sessionize_counts_window(all_events).collect()
-    }
-    finals = {u: (s, e) for (u, s, e) in evicted}
-    finals[99] = max(live99)
-    assert finals == batch
-
-
-def test_sessionize_ttl_rejects_ttl_inside_gap(spark):
-    from dirt_hadoop_similarity_spark.streaming import events as sev
-
-    with pytest.raises(ValueError, match="ttl_seconds"):
-        sev.sessionize_stateful_ttl(
-            spark.createDataFrame(
-                [], "event_id long, ts timestamp, user_id long"
-            ),
-            gap_seconds=1800, ttl_seconds=600,
-        )
-
-
-def test_stream_outer_interval_join_keeps_unmatched(spark, sf_dir):
-    """LEFT OUTER stream-stream interval join: the stream drains to the
-    batch left-range-join rows — matched pairs AND the NULL-padded rows
-    for errors with no preceding purchase — except errors still inside
-    the final watermark horizon, whose unmatched verdict the stream
-    correctly WITHHOLDS (a match could still arrive)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    batch = sev.purchases_before_errors_outer(ev)
-    expect_all = {
-        (r.user_id, r.error_id, r.purchase_ts) for r in batch.collect()
-    }
-    # the GLOBAL watermark is the min across the two watermark nodes,
-    # each of which sees only its own side's filtered events — so the
-    # withheld horizon starts at min(max error ts, max purchase ts) - 1h,
-    # not at the corpus-wide max (error 990, the latest error, sits a
-    # full delay past that min and is correctly withheld)
-    nev = sev.normalize_event_ts(ev)
-    side_max = {
-        r["event_type"]: r["mx"]
-        for r in nev.filter(F.col("event_type").isin("error", "purchase"))
-        .groupBy("event_type")
-        .agg(F.unix_micros(F.max("ts")).alias("mx"))
-        .collect()
-    }
-    wm_us = min(side_max["error"], side_max["purchase"]) - 3600 * 1_000_000
-    horizon = {
-        r.error_id
-        for r in nev
-        .filter(F.col("event_type") == "error")
-        .filter(F.unix_micros("ts") > wm_us)
-        .select("event_id").withColumnRenamed("event_id", "error_id")
-        .collect()
-    }
-    # in-horizon UNMATCHED rows are withheld by the stream; matched rows
-    # emit regardless of horizon
-    expect = {
-        t for t in expect_all
-        if t[2] is not None or t[1] not in horizon
-    }
-
-    out = sev.purchases_before_errors_outer(sev.stream_events(spark, sf_dir))
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ssjo_smoke_test")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        (r.user_id, r.error_id, r.purchase_ts)
-        for r in spark.table("ssjo_smoke_test").collect()
-    }
-    spark.catalog.dropTempView("ssjo_smoke_test")
-    assert got == expect
-    unmatched = {t for t in got if t[2] is None}
-    matched = got - unmatched
-    assert matched and unmatched  # both regimes actually exercised
-    # the inner join is exactly the matched subset
-    inner = {
-        (r.user_id, r.error_id, r.purchase_ts)
-        for r in sev.purchases_before_errors(ev).collect()
-    }
-    assert matched == inner
-
-
-def test_idempotent_batch_append_survives_redelivery(spark, tmp_path):
-    """foreachBatch is at-least-once: a restart between the sink write
-    and the checkpoint commit RE-DELIVERS the batch, and a plain
-    mode('append') duplicates every row of it.  The batch-id-keyed
-    dynamic partition overwrite all three foreachBatch runners use must
-    replace the failed attempt's partition instead."""
-    from dirt_hadoop_similarity_spark.sources.sinks import (
-        idempotent_batch_append,
-    )
-
-    out = str(tmp_path / "out")
-    b0 = spark.range(10).withColumnRenamed("id", "doc_id")
-    b1 = spark.range(100, 105).withColumnRenamed("id", "doc_id")
-    idempotent_batch_append(b0, out, 0)
-    idempotent_batch_append(b0, out, 0)  # re-delivery of batch 0
-    idempotent_batch_append(b1, out, 1)
-    idempotent_batch_append(b1, out, 1)  # re-delivery of batch 1
-    got = spark.read.parquet(out)
-    assert got.count() == 15  # one copy per batch, not two
-    per_batch = {
-        r["batch_id"]: r["n"]
-        for r in got.groupBy("batch_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert per_batch == {0: 10, 1: 5}
-    # earlier batches are untouched by a later batch's write
-    assert {r.doc_id for r in got.filter("batch_id = 0").collect()} \
-        == set(range(10))
-
-
-def test_incremental_dedup_stream_survives_dirty_text(spark, sf_dir, tmp_path):
-    """Dedup-at-ingest on DIRTY data: a landing batch carrying NULL,
-    empty, whitespace-only, tab-infixed, and non-ASCII texts must not
-    crash the stream, and must keep exactly what the batch operator
-    keeps — zero-token docs have no signature, so they pass the near-dup
-    gate untouched (exact dedup downstream owns identical empties).
-    Same parity contract as test_incremental_dedup_stream_matches_batch,
-    on the corpus the clean sf testdata never exercises."""
-    from dirt_hadoop_similarity_spark.operators import dedup
-    from dirt_hadoop_similarity_spark.streaming import corpus as sco
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    corpus = docs.filter(F.col("doc_id") < 300)
-    index_path = str(tmp_path / "sig_index")
-    dedup.signature_index(corpus).write.parquet(index_path)
-
-    # dirty landing batch: real near-dups of indexed docs + degenerates
-    base = docs.filter(F.col("doc_id") < 5).select("text").collect()
-    dirty = spark.createDataFrame(
-        [
-            (1000, base[0][0], "en", "landing", 10),       # exact dup of indexed
-            (1001, base[1][0] + " tail", "en", "landing", 10),  # near-dup
-            (1002, None, "en", "landing", 0),               # NULL text
-            (1003, "", "en", "landing", 0),                 # empty
-            (1004, "   ", "en", "landing", 3),              # whitespace-only
-            (1005, "wörd\tmix 北京 unique phrasing here", "en", "landing", 30),
-        ],
-        sco.DOCS_SCHEMA,
-    )
-    landing = tmp_path / "landing"
-    dirty.filter("doc_id < 1003").coalesce(1).write.parquet(str(landing / "f0"))
-    dirty.filter("doc_id >= 1003").coalesce(1).write.parquet(str(landing / "f1"))
-
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(sco.DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .load(str(landing))
-    )
-    out_path = str(tmp_path / "deduped")
-    sco.run_incremental_dedup_stream(
-        spark, stream, index_path, out_path, str(tmp_path / "ckpt"),
-        query_name="incr_dedup_dirty_test",
-    )
-    got = {r.doc_id for r in spark.read.parquet(out_path).collect()}
-
-    dups = dedup.incremental_near_duplicates(
-        spark.read.parquet(index_path), dirty
-    ).filter(F.col("est_jaccard") >= 0.5)
-    expect = {
-        r.doc_id
-        for r in dirty.join(
-            dups.select(F.col("batch_id").alias("doc_id")).distinct(),
-            "doc_id",
-            "left_anti",
-        ).collect()
-    }
-    assert got == expect
-    # the signature-less degenerates pass the near-dup gate untouched
-    assert {1002, 1003, 1004}.issubset(got)
-    # the exact dup of an indexed doc is dropped
-    assert 1000 not in got
 
 
 def _time_split_events(spark, sf_dir, dest):
@@ -710,43 +214,3 @@ def test_windowed_counts_two_file_replay_matches_batch(spark, sf_dir, tmp_path):
     b = {(r.window_start, r.event_type): (r.n, round(r.total_value, 6))
          for r in sev.windowed_counts(src).collect()}
     assert s == b and len(s) > 0
-
-
-def test_interval_join_restart_resumes_exactly_once(spark, sf_dir, tmp_path):
-    """stream_interval_join's restart pin (the stream_dedup/e1_once
-    pattern): run the checkpointed join over file 1, STOP, add file 2,
-    re-run with the same checkpoint.  The second run must resume from
-    the committed offsets (no duplicate pairs), carry enough purchase
-    state across the restart to match file-2 errors against file-1
-    purchases (the interval bound keeps them inside the watermark
-    horizon), and the union must equal the batch range join exactly."""
-    d = str(tmp_path / "ij_replay")
-    src = _time_split_events(spark, sf_dir, d)
-    import os, shutil
-    staged = f"{d}/staged"
-    os.makedirs(staged)
-    shutil.move(f"{d}/e0.parquet", f"{staged}/e0.parquet")
-
-    out, ckpt = str(tmp_path / "ij_out"), str(tmp_path / "ij_ckpt")
-
-    def run(name):
-        stream = (
-            spark.readStream.format("parquet")
-            .schema(sev.EVENTS_SCHEMA)
-            .load(staged)
-        )
-        sev.run_stream_to_parquet(
-            sev.purchases_before_errors(stream), out, ckpt, query_name=name)
-
-    run("ij_restart_run1")
-    n1 = spark.read.parquet(out).count()
-    assert n1 > 0
-
-    shutil.move(f"{d}/e1.parquet", f"{staged}/e1.parquet")
-    run("ij_restart_run2")
-
-    got = spark.read.parquet(out)
-    expect = sev.purchases_before_errors(src)
-    assert got.count() > n1, "run 2 must emit the file-2 matches"
-    assert got.exceptAll(expect).count() == 0
-    assert expect.exceptAll(got).count() == 0

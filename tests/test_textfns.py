@@ -18,25 +18,46 @@ def test_token_counts(spark):
     assert _one(spark, "abcdefgh abc", textfns.bpe_ish_token_count) == 3
 
 
+def _ltoks(text):
+    return textfns.tokens(F.lower(text))
+
+
+def _quality(text):
+    return textfns.quality_score_from(textfns.tokens(text), _ltoks(text), text)
+
+
+def _lang_id(text):
+    return textfns.lang_id_from_scores({
+        lang: textfns._marker_hits(_ltoks(text), markers)
+        for lang, markers in textfns.LANG_MARKERS.items()
+    })
+
+
 def test_ratios(spark):
-    assert _one(spark, "the dog", textfns.stopword_ratio) == pytest.approx(0.5)
+    def stop(t):
+        return textfns.stopword_ratio_from(_ltoks(t))
+
+    def mwl(t):
+        return textfns.mean_word_length_from(textfns.tokens(t))
+
+    assert _one(spark, "the dog", stop) == pytest.approx(0.5)
     assert _one(spark, "ab!?", textfns.punct_ratio) == pytest.approx(0.5)
     assert _one(spark, "", textfns.punct_ratio) == 0.0
-    assert _one(spark, "ab abcd", textfns.mean_word_length) == pytest.approx(3.0)
+    assert _one(spark, "ab abcd", mwl) == pytest.approx(3.0)
 
 
 def test_quality_bounds(spark):
-    v = _one(spark, "the a of and to " * 30, textfns.quality_score)
+    v = _one(spark, "the a of and to " * 30, _quality)
     assert 0.0 <= v <= 1.0
-    assert _one(spark, "", textfns.quality_score) <= 0.4
+    assert _one(spark, "", _quality) <= 0.4
 
 
 def test_lang_id(spark):
-    assert _one(spark, "the cat of the house and a dog", textfns.lang_id) == "en"
-    assert _one(spark, "el perro de la casa y que", textfns.lang_id) == "es"
-    assert _one(spark, "xyzzy plugh", textfns.lang_id) == "und"
+    assert _one(spark, "the cat of the house and a dog", _lang_id) == "en"
+    assert _one(spark, "el perro de la casa y que", _lang_id) == "es"
+    assert _one(spark, "xyzzy plugh", _lang_id) == "und"
     # tie (de 'die' vs fr 'la' one hit each) → und
-    assert _one(spark, "die la", textfns.lang_id) == "und"
+    assert _one(spark, "die la", _lang_id) == "und"
 
 
 def test_fingerprint_bag_of_words_collision(spark):
@@ -139,11 +160,6 @@ def test_classifier_logit_hand_computed(spark):
             textfns.tokens(F.lower(F.col("text"))),
             F.col("text")).alias("v")).first().v
     assert got == pytest.approx(expected, abs=1e-12)
-    # keep flips with the threshold around the known logit
-    assert df.select(textfns.classifier_keep(
-        F.col("text"), threshold=got - 0.1).alias("k")).first().k
-    assert not df.select(textfns.classifier_keep(
-        F.col("text"), threshold=got + 0.1).alias("k")).first().k
 
 
 class TestNormalizeText:

@@ -56,7 +56,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 #: queries_*.py matches are docstring mentions; their UDF bodies live
 #: in these operator modules)
 UDF_SOURCE_FILES = [
-    "dirt_hadoop_similarity_spark/functions/_udf_wrappers.py",
     "dirt_hadoop_similarity_spark/operators/_extraction_udf.py",
     "dirt_hadoop_similarity_spark/operators/multimodal.py",
     "dirt_hadoop_similarity_spark/operators/similarity.py",

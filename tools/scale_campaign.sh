@@ -96,23 +96,9 @@ step "session SPANS straggler stress (native session_window vs gap-bucket twin)"
 python tools/sessionize_stress.py --events 20000000 --hot-frac 0.8 \
   --repeats 2 --with-auto --spans \
   > "$OUT/sessionize_spans_stress.txt" 2> "$OUT/sessionize_spans_stress.err"
-step "STREAMING session-window hot-user leg (VERDICT r11 task 4)"
-python tools/sessionize_stress.py --events 5000000 --hot-frac 0.8 \
-  --repeats 2 --streaming \
-  > "$OUT/stream_session_window_stress.txt" \
-  2> "$OUT/stream_session_window_stress.err"
-step "TTL sessionizer state law (growing key space: no-TTL vs TTL rows)"
-python tools/sessionize_stress.py --ttl --events 2000000 \
-  --stream-dir /tmp/dhs_sessionize_ttl \
-  > "$OUT/sessionize_ttl_state_law.txt" \
-  2> "$OUT/sessionize_ttl_state_law.err"
 step "vector-admission gate leg (10% NULL/ragged at x10: overhead + post-gate correctness)"
 python tools/vector_gate_bench.py --mult 10 --repeats 2 \
   > "$OUT/vector_gate.txt" 2> "$OUT/vector_gate.err"
-step "partition-prune evidence (date-partitioned vs flat layout, x10)"
-python tools/partition_prune_bench.py --mult 10 --repeats 2 \
-  --out "$SCALE_DIR/prune" \
-  > "$OUT/partition_prune.txt" 2> "$OUT/partition_prune.err"
 
 step "scale x100 (the long leg)"
 python tools/scale_bench.py --mult 100 --repeats 2 --markdown \

@@ -69,203 +69,6 @@ def window_sessionize(ev):
     return scale.sessionize_counts_window(ev)
 
 
-def _run_streaming_leg(spark, args) -> None:
-    """VERDICT r11 task 4: does the STREAMING session-window twin
-    (streaming/events.session_window_counts) straggle under one hot
-    user the way the batch native route does (~5x @ 5M, ~29x @ 20M)?
-
-    Batch session_window sorts a user's whole history in ONE task; the
-    streaming operator also hash-partitions state by the grouping key,
-    so every hot-user row lands in one state-store partition per
-    micro-batch and the merging-sessions pass over that partition is
-    single-threaded — same skew exposure, different constant (state
-    merge vs full sort).  This leg measures it instead of guessing:
-    full availableNow replay of a hot corpus (``--hot-frac`` on one
-    user) vs a uniform control (hot_frac=0) at the SAME volume,
-    interleaved min-of-``--repeats``, with state/output rows read from
-    the query's own progress metrics.
-
-    Replay shape: each corpus arrives as ONE data micro-batch (all
-    files available at start, no maxFilesPerTrigger cap), so batch 1
-    runs with watermark 0 — nothing is late-dropped, all sessions
-    merge into state — and availableNow's final batch advances the
-    watermark past every session end and emits the full result.  The
-    wall time is dominated by exactly the state-merge path under test.
-    """
-    import shutil
-
-    from dirt_hadoop_similarity_spark.streaming import events as sev
-
-    base = args.stream_dir
-    shutil.rmtree(base, ignore_errors=True)
-    corpora = {}
-    for kind, frac in (("hot", args.hot_frac), ("uniform", 0.0)):
-        path = os.path.join(base, f"events_{kind}")
-        synth_events(spark, args.events, frac).write.mode(
-            "overwrite").parquet(path)
-        corpora[kind] = path
-    schema = spark.read.parquet(corpora["hot"]).schema
-
-    def replay(kind: str, path: str, rep: int):
-        ckpt = os.path.join(base, f"ckpt_{kind}_{rep}")
-        stream = spark.readStream.schema(schema).parquet(path)
-        df = sev.session_window_counts(stream)
-        t0 = time.perf_counter()
-        q = (
-            df.writeStream.outputMode("append")
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-            state_rows = out_rows = 0
-            for p in reversed(q.recentProgress):
-                ops = p.get("stateOperators") or []
-                if ops:
-                    state_rows = max(
-                        state_rows,
-                        sum(int(o.get("numRowsTotal", 0)) for o in ops),
-                    )
-                out_rows += sum(
-                    int(s.get("numOutputRows", 0)) for s in [p["sink"]]
-                )
-        finally:
-            q.stop()
-        return time.perf_counter() - t0, state_rows, out_rows
-
-    results = {k: {"sec": None, "state_rows": 0, "out_rows": 0}
-               for k in corpora}
-    for i in range(args.repeats):
-        order = list(corpora.items())
-        if i % 2:
-            order.reverse()
-        for kind, path in order:
-            secs, state_rows, out_rows = replay(kind, path, i)
-            r = results[kind]
-            r["sec"] = secs if r["sec"] is None else min(r["sec"], secs)
-            r["state_rows"] = max(r["state_rows"], state_rows)
-            r["out_rows"] = max(r["out_rows"], out_rows)
-
-    spark.stop()
-    print(json.dumps({
-        "metric": "streaming_session_window_stress",
-        "events": args.events, "hot_frac": args.hot_frac,
-        "repeats": args.repeats,
-        "hot_sec": round(results["hot"]["sec"], 3),
-        "uniform_sec": round(results["uniform"]["sec"], 3),
-        "hot_over_uniform": round(
-            results["hot"]["sec"] / max(results["uniform"]["sec"], 1e-9), 2
-        ),
-        "hot_out_rows": results["hot"]["out_rows"],
-        "uniform_out_rows": results["uniform"]["out_rows"],
-        "hot_peak_state_rows": results["hot"]["state_rows"],
-        "uniform_peak_state_rows": results["uniform"]["state_rows"],
-    }))
-
-
-def _run_ttl_leg(spark, args) -> None:
-    """State-law contrast for the TTL sessionizer on a GROWING key
-    space (the shape that motivates it): ``--waves`` cohorts of fresh
-    anonymous keys, each active for a 2-hour window, one day apart.
-    ``sessionize_stateful`` must end the replay holding one state row
-    per key EVER SEEN; ``sessionize_stateful_ttl`` (ttl 2 h, watermark
-    30 min) must evict each cohort as the next wave's watermark passes
-    and end holding only the FINAL cohort — the bounded-by-active-keys
-    law, measured rather than asserted.
-
-    One parquet file per wave + maxFilesPerTrigger=1 makes each wave a
-    micro-batch, so the watermark advances wave by wave exactly as a
-    live ingest's would.  Both variants replay the same files; state
-    rows come from the query's own progress metrics; the TTL run also
-    checks the eviction ledger: every non-final-cohort key evicts
-    exactly once.
-    """
-    import shutil
-
-    from dirt_hadoop_similarity_spark.streaming import events as sev
-
-    base = args.stream_dir
-    shutil.rmtree(base, ignore_errors=True)
-    waves, keys = args.waves, args.keys
-    keys_per_wave = keys // waves
-    n_per_wave = max(args.events // waves, keys_per_wave)
-    land = os.path.join(base, "waves")
-    for w in range(waves):
-        # fresh cohort per wave = a disjoint numeric key range (the
-        # operators' output schema types user_id as long)
-        spark.range(n_per_wave).select(
-            (
-                F.lit(w * keys_per_wave)
-                + F.pmod(F.xxhash64("id"), F.lit(keys_per_wave))
-            ).cast("long").alias("user_id"),
-            F.timestamp_seconds(
-                F.lit(w * 86_400)
-                + (F.abs(F.xxhash64("id", F.lit(w))) % 7_200)
-            ).alias("ts"),
-            F.col("id").alias("event_id"),
-        ).coalesce(1).write.parquet(os.path.join(land, f"wave{w:03d}"))
-    schema = spark.read.parquet(os.path.join(land, "wave000")).schema
-
-    def replay(kind: str):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(land)
-        )
-        if kind == "ttl":
-            df = sev.sessionize_stateful_ttl(
-                stream, gap_seconds=1800, ttl_seconds=7200,
-                watermark="30 minutes",
-            )
-        else:
-            df = sev.sessionize_stateful(stream, gap_seconds=1800)
-        name = f"ttl_leg_{kind}"
-        t0 = time.perf_counter()
-        q = (
-            df.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option(
-                "checkpointLocation", os.path.join(base, f"ckpt_{kind}")
-            )
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            ops = (q.lastProgress or {}).get("stateOperators") or []
-            state_rows = sum(int(o.get("numRowsTotal", 0)) for o in ops)
-        finally:
-            q.stop()
-        wall = time.perf_counter() - t0
-        evicted = 0
-        if kind == "ttl":
-            rows = spark.table(name).collect()
-            ev_keys = [r.user_id for r in rows if r.evicted]
-            assert len(ev_keys) == len(set(ev_keys)), \
-                "a key evicted more than once"
-            evicted = len(ev_keys)
-        spark.catalog.dropTempView(name)
-        return wall, state_rows, evicted
-
-    no_ttl_wall, no_ttl_state, _ = replay("no_ttl")
-    ttl_wall, ttl_state, evicted = replay("ttl")
-    spark.stop()
-    print(json.dumps({
-        "metric": "sessionize_ttl_state_law",
-        "events": n_per_wave * waves, "keys": keys_per_wave * waves,
-        "waves": waves,
-        "no_ttl_final_state_rows": no_ttl_state,
-        "ttl_final_state_rows": ttl_state,
-        "ttl_evicted_keys": evicted,
-        "state_ratio": round(no_ttl_state / max(ttl_state, 1), 2),
-        "no_ttl_wall_sec": round(no_ttl_wall, 3),
-        "ttl_wall_sec": round(ttl_wall, 3),
-    }))
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--events", type=int, default=20_000_000)
@@ -278,25 +81,6 @@ def main() -> None:
                     help="stress the per-SESSION span family instead "
                          "of the per-user counts: native session_window "
                          "vs session_spans_bucketed (VERDICT r10 task 2)")
-    ap.add_argument("--streaming", action="store_true",
-                    help="stress the STREAMING session-window twin "
-                         "(streaming/events.session_window_counts) "
-                         "instead: hot corpus vs a uniform control at "
-                         "the same volume, full availableNow replay, "
-                         "state rows from the query's own progress "
-                         "metrics (VERDICT r11 task 4)")
-    ap.add_argument("--stream-dir", default="/tmp/dhs_sessionize_stream",
-                    help="scratch dir for the --streaming corpora, "
-                         "checkpoints and sink")
-    ap.add_argument("--ttl", action="store_true",
-                    help="measure the TTL sessionizer's bounded-state "
-                         "law on a growing key space: per-wave fresh "
-                         "key cohorts, no-TTL vs TTL final state rows")
-    ap.add_argument("--keys", type=int, default=200_000,
-                    help="total distinct keys across all --ttl waves")
-    ap.add_argument("--waves", type=int, default=10,
-                    help="fresh-key cohorts (one micro-batch each) for "
-                         "the --ttl leg")
     args = ap.parse_args()
 
     from dirt_hadoop_similarity_spark.operators import scale
@@ -309,15 +93,7 @@ def main() -> None:
                       shuffle_partitions=int(cpus),
                       extra_conf={"spark.driver.memory": mem})
 
-    if args.ttl:
-        _run_ttl_leg(spark, args)
-        return
-
     ev = synth_events(spark, args.events, args.hot_frac)
-
-    if args.streaming:
-        _run_streaming_leg(spark, args)
-        return
 
     if args.spans:
         # the per-session family: Spark's built-in session_window

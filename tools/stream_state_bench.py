@@ -123,17 +123,6 @@ def run_one(spark, sf_dir: str) -> dict:
     )
     res["sessionize"] = {"sec": s, "out_rows": o, "state_rows": sr,
                          "state_bytes": sb, "distinct_users": users}
-
-    # native session windows (round 10): the TIGHTEST state law — a
-    # session's state row is evicted the moment the watermark passes
-    # its end, so surviving state == sessions still OPEN at the final
-    # watermark, regardless of users or volume.
-    s, o, sr, sb = _drain(
-        sev.session_window_counts(sev.stream_events(spark, sf_dir)),
-        "ssb_swin",
-    )
-    res["session_windows"] = {"sec": s, "out_rows": o, "state_rows": sr,
-                              "state_bytes": sb}
     return res
 
 
