@@ -27,7 +27,9 @@ Sizing and cache:
     released when main returns or raises.
 
 A corpus or test-set file that does not exist is reported in one line on
-stderr with exit status 2, before Spark starts or --out is created.
+stderr with exit status 2, before Spark starts or --out is created.  A test
+set whose files compile to zero pairs runs to the end, with a one-line
+warning on stderr and in report.md.
 
 Outputs under --out (created if needed):
     similarities.tsv/   p1 \t p2 \t score   (Job-4 final output, F5 export)
@@ -49,13 +51,14 @@ import sys
 from pyspark.sql import functions as F
 
 
+_PROG = "python -m dirt_hadoop_similarity_spark"
 _PARTITIONS = "spark.sql.shuffle.partitions"
 _AQE = "spark.sql.adaptive.enabled"
 
 
 def _build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
-        prog="python -m dirt_hadoop_similarity_spark",
+        prog=_PROG,
         description="DIRT pipeline: biarc corpus -> path similarities "
         "(+ optional evaluation against a labeled test set)",
     )
@@ -248,6 +251,13 @@ def _run(spark, args, cached: list) -> dict:
         report = ev.evaluate(scored, gold)
         metrics = report["metrics"]
         pairs_found = report["n_scored"]
+        warning = None
+        if report["n_gold"] == 0:
+            warning = (
+                f"warning: --testset {pos} {neg} compiled to 0 pairs "
+                f"(no line has both phrases in the {args.dialect} grammar)"
+            )
+            print(f"{_PROG}: {warning}", file=sys.stderr)
 
         (
             report["scan"]
@@ -290,6 +300,8 @@ def _run(spark, args, cached: list) -> dict:
                 f"| **Recall** | {metrics['recall']:.4f} |\n"
                 f"| **F1 Score** | {metrics['f1']:.4f} |\n\n"
             )
+            if warning:
+                f.write(f"**{warning}**\n\n")
             for cls, title in (
                 ("tp", "True positives"),
                 ("fp", "False positives"),

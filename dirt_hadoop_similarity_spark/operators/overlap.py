@@ -1,4 +1,4 @@
-"""Overlap + final Lin similarity: Jobs 3 and 4 as one join pipeline.
+"""Overlap + final Lin similarity: Jobs 3 and 4 as one per-path lookup.
 
     sim_slot(p1, p2) = Σ_{f ∈ V1∩V2} (mi1(f) + mi2(f)) / (ΣMI(p1,slot) + ΣMI(p2,slot))
     score(p1, p2)    = sqrt(sim_X · sim_Y)
@@ -6,7 +6,7 @@
 Reference semantics preserved exactly (DirtDriver.java:736-978):
 
   * pair universe comes from the test set, canonicalized p1 <= p2
-    (DirtDriver.java:861-862);
+    (DirtDriver.java:861-862); a pair with a null side is dropped;
   * a pair is EMITTED (even with score 0.0) iff at least one member path
     has MI features — that is what creates a Job-3 reduce group; pairs
     where neither path survived MI are absent from the output, and pairs
@@ -15,14 +15,15 @@ Reference semantics preserved exactly (DirtDriver.java:736-978):
     into v1 and leaves v2 empty (DirtDriver.java:890-893);
   * zero denominators guard to 0.0 (DirtDriver.java:972-973).
 
-Spark shape: the Job-3 broadcast fan-out becomes ONE broadcast join of
-the MI table against the (tiny) pair-membership table, each fanned row
-tagged with the vector side it fills; the feature intersection is then
-a keyed aggregation, not a self-join.  The big MI relation is scanned
-once and crosses one exchange — an explicit (p1, p2) repartition that
-the side-collapse aggregate, the numerator aggregate and the emit-zero
-distinct all reuse (guide §2.4; the former shape scanned MI three times
-and exchanged the fan-out twice more for the self-join's two sides).
+Spark shape: each path is scored from ONE row, not from copies of its MI
+rows.  MI is semi-joined to the test set's member paths (each kept row
+once) and aggregated per path into its X and Y feature vectors — ``word →
+mi`` maps built from entries sorted by word — beside its ΣMI
+denominators.  Each canonical pair looks that row up once per side (a
+broadcast of the per-path relation, reused for both sides), and the
+intersection sums are native higher-order functions over the two maps
+(``map_zip_with`` + ``aggregate``), linear in the two vectors.  The
+numerator sums in word order within a slot, whatever the partitioning.
 """
 
 from __future__ import annotations
@@ -37,12 +38,12 @@ def canonical_pairs(pairs_df: DataFrame) -> DataFrame:
     """P9: canonicalize and dedupe to ``(p1, p2)`` with p1 <= p2.
 
     Duplicate test-set pairs collapse — the reference's HashMap ``v1.put``
-    overwrite makes duplicates a no-op there too."""
+    overwrite makes duplicates a no-op there too.  The null filter runs on
+    the raw sides: ``least``/``greatest`` skip nulls, so ``(a, null)``
+    would otherwise become the fabricated self-pair ``(a, a)``."""
     return (
-        pairs_df.select(
-            F.least("p1", "p2").alias("p1"), F.greatest("p1", "p2").alias("p2")
-        )
-        .filter(F.col("p1").isNotNull() & F.col("p2").isNotNull())
+        pairs_df.filter(F.col("p1").isNotNull() & F.col("p2").isNotNull())
+        .select(F.least("p1", "p2").alias("p1"), F.greatest("p1", "p2").alias("p2"))
         .distinct()
     )
 
@@ -53,6 +54,23 @@ def pair_members(pairs_df: DataFrame) -> DataFrame:
     return pairs_df.select(
         "p1", "p2", F.explode(F.array_distinct(F.array("p1", "p2"))).alias("path")
     )
+
+
+def _features(slot: str):
+    """One slot of a path's vector: ``word → mi`` built from entries sorted
+    by word (an empty map when the path has no feature in the slot)."""
+    entry = F.when(F.col("slot") == slot, F.struct("word", "mi"))
+    return F.map_from_entries(F.array_sort(F.collect_list(entry)))
+
+
+def _intersection_sum(m1: str, m2: str):
+    """Σ (mi1 + mi2) over the words both maps hold, in ``m1``'s key order;
+    0.0 when either side has no vector."""
+    both = F.map_zip_with(m1, m2, lambda _, a, b: a + b)
+    total = F.aggregate(
+        F.map_values(both), F.lit(0.0), lambda acc, v: acc + F.coalesce(v, F.lit(0.0))
+    )
+    return F.coalesce(total, F.lit(0.0))
 
 
 def similarities(
@@ -66,89 +84,45 @@ def similarities(
     ``sum_mi_df``: output of :func:`mi.sum_mi`.
     """
     pairs = canonical_pairs(pairs_df)
-    members = F.broadcast(pair_members(pairs))
+    paths = F.broadcast(pair_members(pairs).select("path"))
 
-    # J3: keep only MI rows belonging to some pair, fanned out per pair
-    # and TAGGED with the vector side each row fills — ONE scan of the
-    # MI relation (the former a/b role split scanned it twice, and the
-    # emit-zero universe a third time).  The v1/v2 split that zeroes
-    # self-pairs is preserved: a p1 == p2 row lands in mi1 only (the
-    # reference routes all rows into v1, DirtDriver.java:890-893), so no
-    # intersection survives for it.
-    fanned = mi_df.join(members, "path", "inner")
-    tagged = fanned.select(
-        "p1", "p2", "slot", "word",
-        F.when(F.col("path") == F.col("p1"), F.col("mi")).alias("mi1"),
-        F.when(
-            (F.col("path") == F.col("p2")) & (F.col("p1") != F.col("p2")),
-            F.col("mi"),
-        ).alias("mi2"),
-    ).repartition("p1", "p2")
-
-    # J4/A5: feature intersection as ONE keyed aggregation over the
-    # shared (p1, p2) clustering instead of a self-equi-join of two
-    # role-filtered scans.  The explicit repartition establishes the
-    # partitioning ONCE and all three keyed consumers — the
-    # (p1,p2,slot,word) side-collapse, the (p1,p2) numerator aggregate,
-    # and the emit-zero distinct — reuse it exchange-free (guide §2.4:
-    # operations keyed the same way share one exchange; subset
-    # clustering satisfies each wider grouping).  mi is unique per
-    # (path, slot, word), so each group holds at most one row per side
-    # and max() is exact selection, not float combining; a feature is
-    # in the intersection iff both sides are present, and the numerator
-    # terms (mi1 + mi2 summed per pair/slot) are the identical doubles
-    # the join produced.
-    grouped = tagged.groupBy("p1", "p2", "slot", "word").agg(
-        F.max("mi1").alias("mi1"), F.max("mi2").alias("mi2")
+    # J3/A5: one row per member path with features.  Both sides of the
+    # denominator join are clustered by path, so the shuffle-hash hint
+    # joins them in place instead of broadcasting ΣMI in a job of its own.
+    vectors = (
+        mi_df.join(paths, "path", "left_semi")
+        .groupBy("path")
+        .agg(_features("X").alias("fx"), _features("Y").alias("fy"))
+        .join(sum_mi_pivoted(sum_mi_df).hint("shuffle_hash"), "path", "left")
     )
-    nums = (
-        grouped.filter(F.col("mi1").isNotNull() & F.col("mi2").isNotNull())
-        .groupBy("p1", "p2")
-        .agg(
-            F.sum(F.when(F.col("slot") == "X", F.col("mi1") + F.col("mi2"))).alias("num_x"),
-            F.sum(F.when(F.col("slot") == "Y", F.col("mi1") + F.col("mi2"))).alias("num_y"),
+
+    # J4/J5: each pair looks its two paths up in the broadcast per-path
+    # relation; a pair is emitted iff either path has a row.
+    def side(i: int) -> DataFrame:
+        return F.broadcast(
+            vectors.select(
+                F.col("path").alias(f"p{i}"),
+                F.col("fx").alias(f"fx{i}"),
+                F.col("fy").alias(f"fy{i}"),
+                F.col("sum_mi_x").alias(f"s{i}x"),
+                F.col("sum_mi_y").alias(f"s{i}y"),
+            )
         )
-    )
-
-    # Emit-zero universe: pairs where >=1 member path has MI features —
-    # the distinct of the SAME tagged relation, exchange-free on the
-    # shared partitioning (every tagged row carries a side by
-    # construction, so this is exactly the former mi ⋈ members
-    # projection).
-    emitted = tagged.select("p1", "p2").distinct()
-
-    # J5: denominators from the pivoted ΣMI table, one lookup per side.
-    denoms = sum_mi_pivoted(sum_mi_df)
-    d1 = denoms.select(
-        F.col("path").alias("p1"),
-        F.col("sum_mi_x").alias("s1x"),
-        F.col("sum_mi_y").alias("s1y"),
-    )
-    d2 = denoms.select(
-        F.col("path").alias("p2"),
-        F.col("sum_mi_x").alias("s2x"),
-        F.col("sum_mi_y").alias("s2y"),
-    )
 
     scored = (
-        emitted.join(nums, ["p1", "p2"], "left")
-        .join(d1, "p1", "left")
-        .join(d2, "p2", "left")
-        .select(
-            "p1",
-            "p2",
-            *[
-                F.coalesce(c, F.lit(0.0)).alias(c)
-                for c in ("num_x", "num_y", "s1x", "s1y", "s2x", "s2y")
-            ],
+        pairs.join(side(1), "p1", "left")
+        .join(side(2), "p2", "left")
+        .filter(F.col("fx1").isNotNull() | F.col("fx2").isNotNull())
+    )
+
+    def sim(slot: str):
+        den = F.coalesce(F.col(f"s1{slot}"), F.lit(0.0)) + F.coalesce(
+            F.col(f"s2{slot}"), F.lit(0.0)
         )
-    )
-    sim_x = F.when(
-        F.col("s1x") + F.col("s2x") > 0, F.col("num_x") / (F.col("s1x") + F.col("s2x"))
+        num = _intersection_sum(f"f{slot}1", f"f{slot}2")
+        return F.when(den > 0, num / den).otherwise(0.0)
+
+    score = F.when(
+        F.col("p1") != F.col("p2"), F.sqrt(sim("x") * sim("y"))
     ).otherwise(0.0)
-    sim_y = F.when(
-        F.col("s1y") + F.col("s2y") > 0, F.col("num_y") / (F.col("s1y") + F.col("s2y"))
-    ).otherwise(0.0)
-    return scored.select(
-        "p1", "p2", F.sqrt(sim_x * sim_y).alias("score")
-    )
+    return scored.select("p1", "p2", score.alias("score"))

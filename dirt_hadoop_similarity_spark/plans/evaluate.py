@@ -61,6 +61,7 @@ def evaluate(scored: DataFrame, gold_pairs: DataFrame) -> dict:
     to the highest score (the evaluator's strictly-greater update).
     Samples hold every row of each outcome class in scan order; FN adds
     the gold positives absent from ``scored`` with score 0.0.
+    ``n_gold`` counts the canonical gold pairs.
 
     A pair occurring more than once in ``scored`` is counted per
     occurrence, as in the reference's find_optimal_threshold
@@ -114,6 +115,7 @@ def evaluate(scored: DataFrame, gold_pairs: DataFrame) -> dict:
     return {
         "metrics": metrics,
         "n_scored": len(rows),
+        "n_gold": len(gold),
         "scan": local_frame(spark, scan, SCAN_SCHEMA),
         "samples": {
             k: local_frame(spark, v, SAMPLE_SCHEMA) for k, v in classes.items()

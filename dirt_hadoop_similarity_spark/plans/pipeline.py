@@ -6,8 +6,9 @@ every stage (DirtDriver.java:981-1092) collapse into:
     read → parse → explode(extract) → groupBys (triples + marginals)
          → broadcast-join word margins → join path margins → MI + filter
          → [branch A: ΣMI per (path,slot)]
-         → [branch B: pair fan-out → feature intersection → numerators]
-         → join pivoted ΣMI denominators → sqrt(simX·simY)
+         → [branch B: MI ⋉ member paths → one X/Y feature-map row per path]
+         → join pivoted ΣMI denominators per path
+         → per-pair lookup of both paths → map intersection → sqrt(simX·simY)
 
 The only true barriers are the scalar N collect and the cache points:
 ``triples`` feeds three marginals, ``mi`` feeds both branches.

@@ -142,12 +142,12 @@ _PRIORITY = [
     "embedding_near_dups",
     "semantic_dedup",
     # optimization-round changed-plan re-earners (they pre-empt filler
-    # per the ledger rule): overlap.similarities now computes the
-    # feature intersection as one keyed aggregation over a shared
-    # (p1, p2) repartition instead of a role-filtered self-join (guide
-    # §2.4), so these two r16-green consumers' prior driver rows no
-    # longer cover the current plan (dirt_sim, the third consumer, sits
-    # in the r14 cohort above):
+    # per the ledger rule): overlap.similarities' plan has changed
+    # since their r16 rows — it now scores each pair against one
+    # feature-map row per path (MI semi-joined to the member paths,
+    # aggregated per path, looked up per pair) — so these two
+    # consumers' prior driver rows no longer cover the current plan
+    # (dirt_sim, the third consumer, sits in the r14 cohort above):
     "dirt_full_pipeline",
     "dirt_pipeline_exact",
     # freshness filler: the first non-similarity r15-green name

@@ -257,11 +257,11 @@ def dirt_extract_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shipped sf dir.  Stems come from the engine's own Porter implementation
 # (functions/porter.py, Java-parity pinned by its rule-table test), so
 # the oracle trusts the STEMMER as input data and value-checks everything
-# downstream of it — the parse, extraction, MI, top-path selection, pair
-# fan-out, and Lin scoring.  tests/test_pipeline.py asserts this mapping
-# covers the live vocabulary and agrees with porter_stem, so a testdata
-# regeneration that widens the vocabulary fails loudly there, not as a
-# silent oracle mismatch.
+# downstream of it — the parse, extraction, MI, top-path selection, the
+# per-pair feature lookup, and Lin scoring.  tests/test_pipeline.py
+# asserts this mapping covers the live vocabulary and agrees with
+# porter_stem, so a testdata regeneration that widens the vocabulary
+# fails loudly there, not as a silent oracle mismatch.
 FULL_PIPE_STEMS: dict[str, str] = {
     "a": "a", "agg": "agg", "batch": "batch", "big": "big",
     "column": "column", "customer": "custom", "data": "data",
@@ -387,8 +387,8 @@ FROM scored
     "dirt_full_pipeline",
     _FULL_PIPE_SQL,
     "The COMPLETE DIRT DAG in one query: biarc synthesis → token parse → "
-    "path-extraction UDTF → marginals → MI → pair fan-out → feature "
-    "intersection → Lin scores. Pairs come from the corpus's own most "
+    "path-extraction UDTF → marginals → MI → per-path feature maps → pair "
+    "lookup → Lin scores. Pairs come from the corpus's own most "
     "frequent paths; output is the deterministic score summary.  The "
     "oracle replays every stage in SQL, with the live stemmer vocabulary "
     "materialized as an inline lookup (FULL_PIPE_STEMS, coverage-pinned "

@@ -325,7 +325,7 @@ def test_cli_runs_a_fixed_number_of_spark_jobs(spark, tmp_path):
         before = last_job()
         _run_with_testset(tmp_path, "jobs")
         jobs = [j for j in tracker.getJobIdsForGroup(None) if j > before]
-    assert len(jobs) == 11, jobs
+    assert len(jobs) == 10, jobs
 
 
 def _assert_one_line_error(capsys, rc, path, out):
@@ -353,3 +353,26 @@ def test_cli_missing_testset_is_one_line_error(spark, tmp_path, capsys):
         [str(corpus), "--testset", str(pos), str(missing), "--out", str(out)]
     )
     _assert_one_line_error(capsys, rc, missing, out)
+
+
+def test_cli_empty_testset_warns(spark, tmp_path, capsys):
+    # no line of either file compiles, so the job scores nothing: it still
+    # exits 0 with the usual metrics.json keys, and says why on stderr and
+    # in report.md
+    corpus = tmp_path / "corpus_empty_ts.txt"
+    corpus.write_text("\n".join(CORPUS) + "\n")
+    pos = tmp_path / "p_empty_ts.txt"
+    pos.write_text("not a phrase\tnor this one\nonly-one-column\n")
+    neg = tmp_path / "n_empty_ts.txt"
+    neg.write_text("X saw it happen Y\tnor this one\n")
+    out = tmp_path / "out_empty_ts"
+    rc = cli_main(
+        [str(corpus), "--testset", str(pos), str(neg), "--out", str(out)]
+    )
+    assert rc == 0
+    err = [l for l in capsys.readouterr().err.splitlines() if "warning" in l]
+    assert len(err) == 1 and "0 pairs" in err[0], err
+    metrics = json.loads((out / "metrics.json").read_text())
+    assert set(metrics) == {"threshold", "precision", "recall", "f1", "pairs_found"}
+    assert metrics["pairs_found"] == 0
+    assert "compiled to 0 pairs" in (out / "report.md").read_text()

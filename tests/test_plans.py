@@ -100,6 +100,56 @@ def test_pr_scan_is_gold_bounded(spark):
     assert res["scan"].count() <= 20
 
 
+def _seq_list(seq):
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _executed_nodes(node):
+    """Every node of an executed physical plan, through AQE wrappers, query
+    stages and reused exchanges; a cached relation's own plan is not
+    entered (it is an input to the plan, not part of it)."""
+    name = node.getClass().getSimpleName()
+    yield node
+    if name == "InMemoryTableScanExec":
+        return
+    if name == "AdaptiveSparkPlanExec":
+        assert node.isFinalPlan()
+        kids = [node.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        kids = [node.plan()]
+    elif name == "ReusedExchangeExec":
+        kids = [node.child()]
+    else:
+        kids = _seq_list(node.children())
+    for kid in kids:
+        yield from _executed_nodes(kid)
+
+
+def test_similarities_never_fan_out_features_per_pair(spark):
+    """No operator of the similarity plan outputs per-(pair, feature) rows:
+    a path's features are aggregated into one row before any pair sees
+    them, so no node carries a pair column beside ``word``."""
+    from dirt_hadoop_similarity_spark.operators import mi, overlap
+
+    words = [f"w{i}" for i in range(50)]
+    mi_df = spark.createDataFrame(
+        [(f"p{k}", s, w, 1.0 + k) for k in range(10) for s in "XY" for w in words],
+        "path string, slot string, word string, mi double",
+    )
+    pairs = spark.createDataFrame(
+        [("p0", f"p{k}") for k in range(1, 10)] + [("p1", "p2")], "p1 string, p2 string"
+    )
+    sims = overlap.similarities(mi_df, pairs, mi.sum_mi(mi_df))
+    assert len(sims.collect()) == 10
+    outputs = [
+        {a.name() for a in _seq_list(n.output())}
+        for n in _executed_nodes(sims._jdf.queryExecution().executedPlan())
+    ]
+    assert any("word" in o for o in outputs) and any("p1" in o for o in outputs)
+    fanned = [o for o in outputs if "word" in o and o & {"p1", "p2"}]
+    assert not fanned, fanned
+
+
 def test_mixture_factors_broadcast_corpus_never_smj(spark, sf_dir):
     """mixture_resample's corpus side must join the k-row factor table
     by broadcast — a SortMergeJoin here would shuffle the corpus to
