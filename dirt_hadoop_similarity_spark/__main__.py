@@ -27,9 +27,14 @@ Sizing and cache:
     released when main returns or raises.
 
 A corpus or test-set file that does not exist is reported in one line on
-stderr with exit status 2, before Spark starts or --out is created.  A test
-set whose files compile to zero pairs runs to the end, with a one-line
-warning on stderr and in report.md.
+stderr with exit status 2, before Spark starts or --out is created.  A
+corpus from which no triple survives (empty, or every line malformed) and a
+test set whose files compile to zero pairs each run to the end, with a
+one-line warning on stderr and in report.md.
+
+A run removes the evaluation outputs of an earlier run in --out
+(similarities.tsv, pr_curve.csv, metrics.json, report.md) before it writes,
+so a run without --testset leaves none of them behind.
 
 Outputs under --out (created if needed):
     similarities.tsv/   p1 \t p2 \t score   (Job-4 final output, F5 export)
@@ -46,6 +51,7 @@ import argparse
 import glob
 import json
 import os
+import shutil
 import sys
 
 from pyspark.sql import functions as F
@@ -54,6 +60,8 @@ from pyspark.sql import functions as F
 _PROG = "python -m dirt_hadoop_similarity_spark"
 _PARTITIONS = "spark.sql.shuffle.partitions"
 _AQE = "spark.sql.adaptive.enabled"
+# written only with --testset; removed at the start of every run
+_EVAL_OUTPUTS = ("similarities.tsv", "pr_curve.csv", "metrics.json", "report.md")
 
 
 def _build_parser() -> argparse.ArgumentParser:
@@ -150,27 +158,30 @@ def _missing_input(args) -> str | None:
 
 
 def _job_session(spark, corpus: str, shuffle_partitions: int | None):
-    """The job's one sizing decision, on a session of its own.
+    """The job's one sizing decision, on a session of its own; returns the
+    job session and the corpus's text lines, read once on it.
 
     ``newSession()`` shares the SparkContext and the cache but has its own
     SQL conf, so every plan of the job runs under the decision and nothing
     is set on the caller's session.  An explicit ``--shuffle-partitions``
     is the static partition count; otherwise ``scale.static_partitions``
-    derives one from the corpus scan's byte estimate.  Static means AQE
-    off: on a small corpus each AQE stage and broadcast job is fixed cost.
-    At cluster-scale input no count is derived and the job runs with the
-    caller's partitions and AQE setting."""
+    derives one from that scan's byte estimate, against the caller's
+    partition count (a new session does not inherit runtime conf).  Static
+    means AQE off: on a small corpus each AQE stage and broadcast job is
+    fixed cost.  At cluster-scale input no count is derived and the job
+    runs with the caller's partitions and AQE setting."""
     from dirt_hadoop_similarity_spark.operators.scale import static_partitions
 
     job = spark.newSession()
-    parts = shuffle_partitions or static_partitions(spark, spark.read.text(corpus))
+    lines = job.read.text(corpus)
+    parts = shuffle_partitions or static_partitions(spark, lines)
     if parts is None:
         for key in (_PARTITIONS, _AQE):
             job.conf.set(key, spark.conf.get(key))
     else:
         job.conf.set(_PARTITIONS, str(parts))
         job.conf.set(_AQE, "false")
-    return job
+    return job, lines
 
 
 def main(argv=None) -> int:
@@ -190,10 +201,10 @@ def main(argv=None) -> int:
     spark = SparkSession.getActiveSession() or get_spark(
         app_name="dirt-cli", master=args.master
     )
-    job = _job_session(spark, args.corpus, args.shuffle_partitions)
+    job, lines = _job_session(spark, args.corpus, args.shuffle_partitions)
     cached: list = []
     try:
-        summary = _run(job, args, cached)
+        summary = _run(job, lines, args, cached)
     finally:
         # the cache is shared with the caller's session and matches a
         # text scan by path: left cached, these rows would answer a later
@@ -204,23 +215,43 @@ def main(argv=None) -> int:
     return 0
 
 
-def _run(spark, args, cached: list) -> dict:
-    """The job body on the job session; appends every relation it caches
-    to ``cached`` and returns the stdout summary."""
+def _remove_eval_outputs(out: str) -> None:
+    for name in _EVAL_OUTPUTS:
+        path = os.path.join(out, name)
+        if os.path.isdir(path) and not os.path.islink(path):
+            shutil.rmtree(path)
+        elif os.path.lexists(path):
+            os.remove(path)
+
+
+def _warn(warnings: list, message: str) -> None:
+    print(f"{_PROG}: {message}", file=sys.stderr)
+    warnings.append(message)
+
+
+def _run(spark, lines, args, cached: list) -> dict:
+    """The job body on the job session, over the corpus's text ``lines``;
+    appends every relation it caches to ``cached`` and returns the stdout
+    summary."""
     from dirt_hadoop_similarity_spark.functions.phrases import testset_pairs_df
     from dirt_hadoop_similarity_spark.plans import evaluate as ev
     from dirt_hadoop_similarity_spark.plans.pipeline import run_pipeline
     from dirt_hadoop_similarity_spark.sources.sinks import write_tsv
 
     os.makedirs(args.out, exist_ok=True)
+    _remove_eval_outputs(args.out)
 
     pairs = None
     if args.testset:
         pos, neg = args.testset
         pairs = testset_pairs_df(spark, pos, neg, dialect=args.dialect)
 
-    res = run_pipeline(spark, args.corpus, pairs_df=pairs)
+    res = run_pipeline(spark, lines, pairs_df=pairs)
     cached += [res.triples, res.mi]
+    warnings: list = []
+    if res.n_total <= 0:
+        _warn(warnings, f"warning: corpus {args.corpus} yielded 0 triples "
+              "(it is empty, or no line is a biarc with a path between two nouns)")
 
     # Job-2 / Job-2.5 artifacts (rounded like the registry queries so the
     # files are engine-stable)
@@ -251,13 +282,9 @@ def _run(spark, args, cached: list) -> dict:
         report = ev.evaluate(scored, gold)
         metrics = report["metrics"]
         pairs_found = report["n_scored"]
-        warning = None
         if report["n_gold"] == 0:
-            warning = (
-                f"warning: --testset {pos} {neg} compiled to 0 pairs "
-                f"(no line has both phrases in the {args.dialect} grammar)"
-            )
-            print(f"{_PROG}: {warning}", file=sys.stderr)
+            _warn(warnings, f"warning: --testset {pos} {neg} compiled to 0 pairs "
+                  f"(no line has both phrases in the {args.dialect} grammar)")
 
         (
             report["scan"]
@@ -300,7 +327,7 @@ def _run(spark, args, cached: list) -> dict:
                 f"| **Recall** | {metrics['recall']:.4f} |\n"
                 f"| **F1 Score** | {metrics['f1']:.4f} |\n\n"
             )
-            if warning:
+            for warning in warnings:
                 f.write(f"**{warning}**\n\n")
             for cls, title in (
                 ("tp", "True positives"),

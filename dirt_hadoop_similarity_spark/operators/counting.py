@@ -36,12 +36,13 @@ def path_margins(triples_df: DataFrame) -> DataFrame:
 
 
 def global_n(triples_df: DataFrame) -> int:
-    """A2/S6: the scalar N = total triple mass, floored at 1
+    """A2/S6: the scalar N = total triple mass, 0 when no triple survived
     (DirtDriver.java:1127-1160 sums the GLOBAL stream; each extraction
     emits 2 triples of weight n, so summing the fact table is identical).
+    The reference's floor at 1 is applied where N is used, in
+    ``mi.mi_table``, so callers can still tell an empty input.
 
     The one intentional driver-side collect in the pipeline — one row.
     """
     row = triples_df.agg(F.sum("n").alias("total")).first()
-    total = row["total"] or 0
-    return max(int(total), 1)
+    return int(row["total"] or 0)

@@ -32,13 +32,14 @@ def mi_table(
     path_margins_df: DataFrame,
     n_total: int,
 ) -> DataFrame:
-    """J1+J2+F6+P6 → ``(path, slot, word, mi)`` with mi > MI_THRESHOLD."""
+    """J1+J2+F6+P6 → ``(path, slot, word, mi)`` with mi > MI_THRESHOLD;
+    N is ``max(n_total, 1)`` (DirtDriver.java:1127-1160)."""
     sw = F.broadcast(word_margins_df.withColumnRenamed("n", "sw_n"))
     ps = path_margins_df.withColumnRenamed("n", "ps_n")
     joined = triples_df.join(sw, ["slot", "word"], "inner").join(
         ps, ["path", "slot"], "inner"
     )
-    numerator = F.col("n").cast("double") * F.lit(float(n_total))
+    numerator = F.col("n").cast("double") * F.lit(float(max(n_total, 1)))
     denominator = F.col("ps_n").cast("double") * F.col("sw_n").cast("double")
     mi = F.log(numerator / denominator)
     return (

@@ -26,11 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from dirt_hadoop_similarity_spark.operators import counting, mi as mi_ops, overlap
 from dirt_hadoop_similarity_spark.operators.extraction import extractions, facts
-from dirt_hadoop_similarity_spark.sources.biarcs import (
-    parse_biarc_lines,
-    read_biarc_lines,
-    with_tokens,
-)
+from dirt_hadoop_similarity_spark.sources.biarcs import parse_biarc_lines, with_tokens
 
 
 def rebalance_for_extraction(parsed: DataFrame, spark: SparkSession) -> DataFrame:
@@ -72,16 +68,16 @@ def run_pipeline(
 ) -> DirtResult:
     """Run the full DIRT computation.
 
-    ``corpus``: path to biarc text files, or a pre-parsed DataFrame of raw
-    lines with a ``value`` column.  ``pairs_df``: (p1, p2[, label]) path
-    pairs to score; if None, stops after ΣMI.  ``triples`` and ``mi`` come
-    back cached; the caller releases them.
+    ``corpus``: path to biarc text files, or a DataFrame of their raw
+    lines (a ``value`` column, e.g. ``spark.read.text``).  ``pairs_df``:
+    (p1, p2[, label]) path pairs to score; if None, stops after ΣMI.
+    ``triples`` and ``mi`` come back cached; the caller releases them.
+    ``n_total`` is the triple mass N, 0 when no triple survived
+    (``mi_table`` floors it at 1).
     """
     if isinstance(corpus, str):
-        biarcs = read_biarc_lines(spark, corpus)
-    else:
-        biarcs = parse_biarc_lines(corpus)
-    parsed = rebalance_for_extraction(with_tokens(biarcs), spark)
+        corpus = spark.read.text(corpus)
+    parsed = rebalance_for_extraction(with_tokens(parse_biarc_lines(corpus)), spark)
 
     triples = counting.triples(facts(extractions(parsed))).cache()
 

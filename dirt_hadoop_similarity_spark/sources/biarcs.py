@@ -17,7 +17,7 @@ corpus line regardless of sentence length.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # array<struct> of per-sentence tokens; head is the 1-based parent pointer
@@ -52,15 +52,10 @@ filter(
 """
 
 
-def read_biarc_lines(spark: SparkSession, path: str) -> DataFrame:
-    """S1/P1: text scan → ``(head_word, ngram, n)``; malformed lines dropped,
-    unparsable counts → 1."""
-    lines = spark.read.text(path)
-    return parse_biarc_lines(lines)
-
-
 def parse_biarc_lines(lines: DataFrame) -> DataFrame:
-    """Raw text lines (a ``value`` column) → ``(head_word, ngram, n)``."""
+    """S1/P1: raw text lines (a ``value`` column, e.g. ``spark.read.text``)
+    → ``(head_word, ngram, n)``; malformed lines dropped, unparsable
+    counts → 1."""
     # F.get (not []): null-safe on short arrays.  Under ANSI mode p[i]
     # throws on out-of-bounds, and optimizer rules (e.g. local-relation
     # folding) may evaluate the projection before the size() guard filter.

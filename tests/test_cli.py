@@ -376,3 +376,45 @@ def test_cli_empty_testset_warns(spark, tmp_path, capsys):
     assert set(metrics) == {"threshold", "precision", "recall", "f1", "pairs_found"}
     assert metrics["pairs_found"] == 0
     assert "compiled to 0 pairs" in (out / "report.md").read_text()
+
+
+def test_cli_without_testset_removes_earlier_eval_outputs(spark, tmp_path):
+    # a run without --testset into an earlier run's --out must not leave
+    # that run's evaluation beside its own mi.tsv; other files stay
+    out = _run_with_testset(tmp_path, "stale")
+    for name in ("similarities.tsv", "pr_curve.csv", "metrics.json", "report.md"):
+        assert (out / name).exists(), name
+    (out / "notes.txt").write_text("the user's file\n")
+    corpus = tmp_path / "corpus_stale.txt"
+    corpus.write_text("\n".join(CORPUS) + "\n")
+    assert cli_main([str(corpus), "--out", str(out)]) == 0
+    assert sorted(p.name for p in out.iterdir()) == ["mi.tsv", "notes.txt", "sum_mi.tsv"]
+
+
+@pytest.mark.parametrize(
+    "text",
+    ["", "no tabs here\nhead\tonly-two-fields\n\t\t\n"],
+    ids=["empty", "all_malformed"],
+)
+def test_cli_corpus_without_triples_warns(spark, tmp_path, capsys, text):
+    # nothing survives the parse: the job still exits 0 with the usual
+    # metrics.json keys, and says so on stderr and in report.md
+    corpus = tmp_path / "corpus_no_triples.txt"
+    corpus.write_text(text)
+    pos = tmp_path / "p_nt.txt"
+    pos.write_text("X chase Y\tX pursue Y\n")
+    neg = tmp_path / "n_nt.txt"
+    neg.write_text("X chase Y\tX die from Y\n")
+    out = tmp_path / "out_no_triples"
+    rc = cli_main(
+        [str(corpus), "--testset", str(pos), str(neg), "--out", str(out)]
+    )
+    assert rc == 0
+    captured = capsys.readouterr()
+    err = [l for l in captured.err.splitlines() if "warning" in l]
+    assert len(err) == 1 and "0 triples" in err[0], err
+    assert json.loads(captured.out.strip().splitlines()[-1])["global_n"] == 0
+    metrics = json.loads((out / "metrics.json").read_text())
+    assert set(metrics) == {"threshold", "precision", "recall", "f1", "pairs_found"}
+    assert metrics["pairs_found"] == 0
+    assert err[0].split(": ", 1)[1] in (out / "report.md").read_text()
